@@ -2,9 +2,12 @@
 
 The registry queries read ten TPC-H-ish tables (``sources.catalog.TABLES``)
 from one directory.  This module writes that directory from a fixed seed
-at the sf0.1 sizes and value distributions the registry was developed on
-(600k lineitem, 150k orders, 100k events, 5k documents, 2k embeddings),
-so the benchmark needs no data from outside its checkout.  The tier is the
+at the sf0.1 sizes (600k lineitem, 150k orders, 100k events, 5k
+documents, 2k embeddings), so the benchmark needs no data from outside its
+checkout.  It follows the sf0.1 tier the registry was developed on, not
+TPC-H: ``l_orderkey`` is uniform over the orders (2764 orders have no
+lineitem) and ``l_shipdate`` is drawn apart from ``o_orderdate``, as in
+that tier.  NOTES.md records the comparison of the two.  The tier is the
 same on every run; the workload's ``--seed`` only permutes call order.
 
 Each table is one row group, as in the tier the queries were tuned on:

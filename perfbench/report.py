@@ -11,19 +11,31 @@ from stats import tail
 from tracing import GROUP_PREFIX, self_times
 
 
-def end_to_end(calls, timed_s: float, setup_s: float, peak_rss_mb: float) -> tuple[dict, dict]:
+def round_latencies(calls) -> list[float]:
+    """One sample per round: the summed latency of its primary calls (one
+    ``run_pipeline`` on etl_incremental, one call of every query on
+    query_mix).  A round with a failed call gives no sample."""
+    rounds = defaultdict(list)
+    for c in calls:
+        if c.primary:
+            rounds[c.round].append(c)
+    return [sum(c.latency for c in cs) for _, cs in sorted(rounds.items())
+            if all(c.ok for c in cs)]
+
+
+def end_to_end(calls, timed_s: float, setup_s: float, retained_mb: float) -> tuple[dict, dict]:
     """Metrics from the untraced calls, plus notes on how the tail was read."""
-    lat = [c.latency for c in calls if c.primary and c.ok]
+    lat = round_latencies(calls)
     primary = sum(1 for c in calls if c.primary)
     t = tail(lat) if lat else {"value": 0.0, "percentile": 50, "samples": 0, "fallback": True}
     values = {
         "setup_s": setup_s,
-        "call_p50_s": statistics.median(lat) if lat else 0.0,
-        "call_tail_s": t["value"],
+        "round_p50_s": statistics.median(lat) if lat else 0.0,
+        "round_tail_s": t["value"],
         "calls_per_min": 60.0 * primary / timed_s if timed_s > 0 else 0.0,
-        "peak_rss_mb": peak_rss_mb,
+        "retained_heap_mb": retained_mb,
     }
-    return values, {"call_tail_s": t}
+    return values, {"round_tail_s": t}
 
 
 def _mean(xs) -> float:
@@ -92,6 +104,7 @@ def per_layer(calls, tracer, stages, jobs, phases, progress, windows, session,
     m = {name: 0.0 for name in PER_LAYER}
     m["session.get_spark_s"] = session["get_spark_s"]
     m["session.registry_import_s"] = session["registry_import_s"]
+    m["process.peak_rss_mb"] = extra.get("peak_rss_mb", 0.0)
 
     def traced(t: float) -> bool:
         return any(a <= t <= b for a, b in windows)
@@ -99,9 +112,10 @@ def per_layer(calls, tracer, stages, jobs, phases, progress, windows, session,
     traced_calls = [c for c in calls if traced(c.start)]
     primary = [c for c in traced_calls if c.primary]
     untraced = [c for c in calls if c.primary and c.ok and not traced(c.start)]
-    traced_ok = [c.latency for c in primary if c.ok]
-    if traced_ok and untraced:
-        m["trace.overhead_s"] = _median(traced_ok) - _median(c.latency for c in untraced)
+    traced_rounds = round_latencies(traced_calls)
+    untraced_rounds = round_latencies(c for c in calls if not traced(c.start))
+    if traced_rounds and untraced_rounds:
+        m["trace.overhead_s"] = _median(traced_rounds) - _median(untraced_rounds)
     for fam in ("sql", "llm", "stream"):
         m[f"family.{fam}_p50_s"] = _median(c.latency for c in untraced if c.family == fam)
 

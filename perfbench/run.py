@@ -16,6 +16,7 @@ Everything the run writes stays under ``<checkout>/.bench_work``.
 from __future__ import annotations
 
 import argparse
+import gc
 import importlib.util
 import json
 import os
@@ -29,7 +30,6 @@ from pathlib import Path
 BENCH_DIR = Path(__file__).resolve().parent
 ROOT = BENCH_DIR.parent
 PACKAGE = "data_pipeline_who_gho_spark"
-DRIVER_MEMORY = "2g"
 
 
 @dataclass
@@ -37,6 +37,7 @@ class Context:
     """What a workload gets from the runner."""
 
     seed: int
+    trace: bool
     spark: object
     canon: object  # tools/check_correctness.py, for spark_to_pdf and table_sig
     work_root: str
@@ -53,9 +54,9 @@ def prepare_environment(run_dir: str) -> None:
     os.environ["SPARK_GRAFT_STREAM_CKPT_DIR"] = os.path.join(run_dir, "ckpt")
     # session.py defaults to 32 shuffle partitions without it
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    # session.py's 8g default lets the driver heap grow past what a shared
-    # host should give one benchmark run
-    os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
+    # the driver heap keeps the package's own default, so the memory
+    # metrics see how far the program grows it
+    os.environ.pop("SPARK_DRIVER_MEMORY", None)
     # Python workers import the package too; without this they resolve it
     # from wherever the interpreter finds it, or not at all
     paths = [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
@@ -101,9 +102,6 @@ def spark_conf(run_dir: str, event_dir: str | None) -> dict[str, str]:
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(run_dir, "spark-warehouse"),
         "spark.driver.extraJavaOptions":
-            # a heap committed and touched up front keeps the JVM's resident
-            # size from depending on when the collector chose to grow it
-            f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch "
             f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')} -XX:-UsePerfData",
     }
     if event_dir:
@@ -114,6 +112,28 @@ def spark_conf(run_dir: str, event_dir: str | None) -> dict[str, str]:
             "spark.eventLog.rolling.enabled": "false",
         })
     return conf
+
+
+def retained_heap_mb(spark, attempts: int = 8) -> float:
+    """Driver JVM heap still in use after full collections: what the
+    program holds on to once its calls have returned.  Collect until the
+    figure settles: Spark's ContextCleaner frees broadcast and shuffle
+    blocks only after a collection has cleared their references, and took
+    up to three collections half a second apart to do so."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    seen = []
+    for n in range(attempts):
+        if n:
+            time.sleep(0.5)
+        gc.collect()  # drop Python proxies, so py4j releases the Java objects
+        jvm.java.lang.System.gc()
+        seen.append(bean.getHeapMemoryUsage().getUsed() / 2**20)
+        if n >= 2 and abs(seen[-1] - seen[-2]) <= 0.01 * seen[-2]:
+            break
+    print("retained heap after each collection: "
+          + ", ".join(f"{mb:.1f}" for mb in seen) + " MB", file=sys.stderr)
+    return seen[-1]
 
 
 def stop_spark(spark) -> None:
@@ -180,7 +200,7 @@ def measure(args, work_root: str, run_dir: str) -> dict:
         sys.path[:] = saved_path
         assert_checkout_modules()
 
-        ctx = Context(args.seed, spark, canon, work_root, run_dir)
+        ctx = Context(args.seed, bool(args.trace), spark, canon, work_root, run_dir)
         wl = WORKLOAD_CLASSES[args.workload](ctx)
         setup_s = get_spark_s + registry_import_s + wl.setup()
 
@@ -199,9 +219,9 @@ def measure(args, work_root: str, run_dir: str) -> dict:
         with PeakRss() as rss:
             t_start = time.perf_counter()
             i = 0
-            # a run measures at least one whole block (on etl_incremental two
-            # runs and a no-op run), a traced run one untraced and one traced
-            min_rounds = wl.round_block * (2 if args.trace else 1)
+            # a traced run measures at least one untraced and one traced
+            # block (on etl_incremental, two runs and a no-op run each)
+            min_rounds = 2 * wl.round_block if args.trace else wl.min_rounds
             while i < min_rounds or time.perf_counter() - t_start < budget:
                 traced = bool(args.trace) and (i // wl.round_block) % 2 == 1
                 if traced:
@@ -210,7 +230,9 @@ def measure(args, work_root: str, run_dir: str) -> dict:
                     wl.install(tracer)
                     w0 = time.time()
                 try:
-                    calls += wl.round(i)
+                    for c in wl.round(i, traced):
+                        c.round = i
+                        calls.append(c)
                 finally:
                     if traced:
                         windows.append((w0, time.time()))
@@ -219,6 +241,7 @@ def measure(args, work_root: str, run_dir: str) -> dict:
                         wl.tracer = NoTracer()
                 i += 1
             timed_s = time.perf_counter() - t_start
+        retained_mb = retained_heap_mb(spark)
         final_ok = wl.final_check()
 
         host = {
@@ -231,11 +254,13 @@ def measure(args, work_root: str, run_dir: str) -> dict:
             "seed": args.seed,
             "rounds": i,
             "timed_s": timed_s,
+            "peak_rss_mb": rss.peak_mb,  # per layer only: the JVM's heap sizing makes it swing
         }
         extra = {}
         if args.trace:
             progress.drain()
             extra["tables_added"] = len(spark.catalog.listTables()) - tables_before
+            extra["peak_rss_mb"] = rss.peak_mb
             if hasattr(wl, "files_per_partition"):
                 extra["files_per_partition"] = wl.files_per_partition()
     finally:
@@ -264,7 +289,7 @@ def measure(args, work_root: str, run_dir: str) -> dict:
             for name, value in values.items():
                 fh.write(json.dumps({"metric": name, "value": value, **tags[name]}) + "\n")
     else:
-        values, notes = report.end_to_end(untraced, timed_s, setup_s, rss.peak_mb)
+        values, notes = report.end_to_end(untraced, timed_s, setup_s, retained_mb)
         names = layers.END_TO_END
 
     print(f"host: {json.dumps(host)}")
@@ -273,11 +298,11 @@ def measure(args, work_root: str, run_dir: str) -> dict:
         line = f"{name} = {values[name]:.6g} {unit}"
         if name in notes:
             t = notes[name]
-            line += (f"  (p{t['percentile']} of {t['samples']} samples"
+            line += (f"  (p{t['percentile']} of {t['samples']} rounds"
                      + (", fewer than 20: the median" if t["fallback"] else "") + ")")
         print(line)
     for c in calls:
-        print(f"call {c.kind} {c.name} {c.latency:.3f} s{'' if c.ok else ' FAILED'}",
+        print(f"round {c.round} {c.kind} {c.name} {c.latency:.3f} s{'' if c.ok else ' FAILED'}",
               file=sys.stderr)
     for f in wl.failures:
         print(f"FAILED: {f}")

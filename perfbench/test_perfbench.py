@@ -102,6 +102,25 @@ def test_tail_fallback_is_the_median():
     assert tail([3.0, 1.0, 2.0])["value"] == 2.0
 
 
+def test_a_round_is_one_sample_of_its_primary_calls():
+    from workloads import Call
+
+    calls = [
+        Call("query", "a", "sql", 0.0, 1.0, round=0),
+        Call("query", "b", "llm", 0.0, 4.0, round=0),
+        Call("memo_hit", "b", "llm", 0.0, 9.0, primary=False, round=0),
+        Call("query", "a", "sql", 0.0, 2.0, round=1),
+        Call("query", "b", "llm", 0.0, 5.0, round=1),
+        Call("query", "a", "sql", 0.0, 1.0, round=2, ok=False),
+        Call("query", "b", "llm", 0.0, 4.0, round=2),
+    ]
+    # the failed round gives no sample; non-primary calls are left out
+    assert report.round_latencies(calls) == [5.0, 7.0]
+    values, _ = report.end_to_end(calls, 60.0, 1.0, 1.0)
+    assert values["round_p50_s"] == 6.0
+    assert values["calls_per_min"] == 6.0
+
+
 def test_self_time_subtracts_the_union_of_children():
     spans = [
         Span(1, "root", "call", None, 1, "MainThread", 0.0, 10.0),
@@ -192,7 +211,7 @@ def test_every_workload_and_layer_tag_is_declared():
 def test_reports_carry_exactly_the_declared_metrics():
     values, notes = report.end_to_end([], 1.0, 1.0, 1.0)
     assert list(values) == [m["name"] for m in BENCH["end_to_end"]]
-    assert set(notes) == {"call_tail_s"}
+    assert set(notes) == {"round_tail_s"}
 
     class NoSpans:
         spans: list = []

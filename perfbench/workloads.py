@@ -2,9 +2,10 @@
 sends its next call only after the previous one returned.
 
 A workload provides ``setup()`` (returns the seconds of program work it
-did, which count toward ``setup_s``), ``round(i)`` (one unit of timed
-work, returning its ``Call`` records), ``install(tracer)`` (the layer
-wrappers its traced rounds use) and ``final_check()``.  Correctness checks
+did, which count toward ``setup_s``), ``round(i, traced)`` (one unit of
+timed work, returning its ``Call`` records; one round is one sample of
+``round_p50_s``), ``install(tracer)`` (the layer wrappers its traced
+rounds use) and ``final_check()``.  Correctness checks
 run outside every timed region; a failed check marks the calls whose
 output it covers as failed.
 """
@@ -32,8 +33,9 @@ class Call:
     start: float         # epoch seconds
     latency: float
     ok: bool = True
-    primary: bool = True  # counts toward call_p50_s / call_tail_s / calls_per_min
+    primary: bool = True  # counts toward round_p50_s / round_tail_s / calls_per_min
     attrs: dict = field(default_factory=dict)
+    round: int = 0
 
 
 class NoTracer:
@@ -46,6 +48,7 @@ class NoTracer:
 
 class Workload:
     round_block = 1  # traced runs alternate blocks of this many rounds
+    min_rounds = 1  # an untraced run measures at least this many rounds
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -89,9 +92,6 @@ MIX_QUERIES = {
 
 class QueryMix(Workload):
     name = "query_mix"
-    # two rounds at least: sub-second calls swing with the host's speed
-    # phases, so a run samples each query at two points in time
-    round_block = 2
 
     def __init__(self, ctx):
         super().__init__(ctx)
@@ -157,9 +157,10 @@ class QueryMix(Workload):
 
         return call
 
-    def round(self, i: int) -> list[Call]:
-        """Every query once, in a seeded order: whole rounds keep the
-        median over the same mix of queries in every run."""
+    def round(self, i: int, traced: bool) -> list[Call]:
+        """Every query once, in a seeded order.  The round's summed latency
+        is the sample, so every query, the slowest too, counts toward
+        ``round_p50_s``."""
         names = list(self.family)
         self.rng.shuffle(names)
         calls = []
@@ -200,8 +201,8 @@ class QueryMix(Workload):
 
 # -- etl_incremental -----------------------------------------------------------
 
-INITIAL_ROWS = 30_000
-BATCH_ROWS = 5_000
+INITIAL_ROWS = 20_000
+BATCH_ROWS = 2_000
 NOOP_EVERY = 2  # a no-op re-run follows every second incremental run
 
 A1_SQL = """
@@ -236,6 +237,9 @@ def _files(path: str) -> dict[str, int]:
 class EtlIncremental(Workload):
     name = "etl_incremental"
     round_block = 2  # keeps a no-op re-run inside every traced block
+    # the first timed run is still up to 1.4x slower than the next (JIT);
+    # a median of three leaves it out
+    min_rounds = 3
 
     def __init__(self, ctx):
         super().__init__(ctx)
@@ -259,21 +263,29 @@ class EtlIncremental(Workload):
             source_indicators=ind, source_countries=cty)
         self.duck = duckdb.connect()
         spent = 0.0
-        # initial full load, then one warm-up call of each timed kind: the
-        # first incremental run takes the partition-scoped upsert path cold
-        for what in ("initial load", "warm-up run", "warm-up no-op run"):
-            if what == "warm-up run":
-                self.batch += 1
-                self.src.write_batch(self.batch)
+
+        def step(what, fn):
+            nonlocal spent
             t0 = time.perf_counter()
-            metrics = self.pipeline.run_pipeline(self.spark, self.cfg)
-            spent += time.perf_counter() - t0
-            print(f"{what}: {time.perf_counter() - t0:.3f} s", file=sys.stderr)
-            self.check_run(what, metrics)
-        t0 = time.perf_counter()
-        results = self.reads()
-        spent += time.perf_counter() - t0
-        self.check_reads("warm-up reads", results)
+            out = fn()
+            dt = time.perf_counter() - t0
+            spent += dt
+            print(f"{what}: {dt:.3f} s", file=sys.stderr)
+            return out
+
+        def run():
+            return self.pipeline.run_pipeline(self.spark, self.cfg)
+
+        # the initial full load, then one warm-up of each call a round makes:
+        # the first incremental run takes the partition-scoped upsert path
+        # cold; traced rounds add the no-op re-run and the reads
+        self.check_run("initial load", step("initial load", run))
+        self.batch += 1
+        self.src.write_batch(self.batch)
+        self.check_run("warm-up run", step("warm-up run", run))
+        if self.ctx.trace:
+            self.check_run("warm-up no-op run", step("warm-up no-op run", run))
+            self.check_reads("warm-up reads", step("warm-up reads", self.reads))
         return spent
 
     def reads(self):
@@ -315,7 +327,12 @@ class EtlIncremental(Workload):
                 return False
         return True
 
-    def round(self, i: int) -> list[Call]:
+    def round(self, i: int, traced: bool) -> list[Call]:
+        """Append a batch and run the pipeline.  Traced rounds also run the
+        A1/A4 reads and, every second round, a no-op re-run, for their
+        per-layer metrics; untraced rounds leave them out so the timed
+        budget holds more incremental runs.  ``final_check`` checks the
+        reads over the final warehouse."""
         self.batch += 1
         _, rows = self.src.write_batch(self.batch)
         pl = self.pipeline
@@ -324,6 +341,8 @@ class EtlIncremental(Workload):
                                   layer="pipeline")
         run.attrs["rows"] = rows
         run.ok = run.ok and self.check_run(f"batch {self.batch}", metrics)
+        if not traced:
+            return [run]
         read, results = self.timed("read", "who_reads", "etl", self.reads,
                                    primary=False, layer="engine")
         read.ok = read.ok and self.check_reads(f"batch {self.batch} reads", results)
@@ -374,8 +393,14 @@ class EtlIncremental(Workload):
         return len(files) / len(parts) if parts else 0.0
 
     def final_check(self) -> bool:
-        """The fact table must hold exactly the generator's last-write-wins
-        state: same key set, row count and values."""
+        """A1/A4 must match DuckDB over the final warehouse, and the fact
+        table must hold exactly the generator's last-write-wins state: same
+        key set, row count and values."""
+        try:
+            reads_ok = self.check_reads("final reads", self.reads())
+        except Exception as exc:
+            self.fail(f"final reads: {type(exc).__name__}: {exc}")
+            reads_ok = False
         self._duck_views()
         rows = self.duck.sql(
             "SELECT observation_id, indicator_code, spatial_dim, CAST(time_dim AS INT), "
@@ -391,7 +416,7 @@ class EtlIncremental(Workload):
                           if got[k] != self.src.expected[k])
             self.fail(f"fact_observation != expected state: {missing} missing, "
                       f"{extra} extra, {changed} with other values")
-        return ok
+        return ok and reads_ok
 
 
 WORKLOAD_CLASSES = {QueryMix.name: QueryMix, EtlIncremental.name: EtlIncremental}
