@@ -27,7 +27,8 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -54,7 +55,11 @@ def atomic_overwrite(path: str, write_fn) -> None:
     table format (Delta/Iceberg), onto which this call-site maps 1:1.
     """
     tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    write_fn(tmp)
+    try:
+        write_fn(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)  # a failed write leaves no debris
+        raise
     old = path + ".old-" + uuid.uuid4().hex[:8]
     if os.path.exists(path):
         os.rename(path, old)
@@ -147,6 +152,40 @@ def _is_hive_partitioned(path: str, first_pcol: str) -> bool:
         return False
 
 
+_DUPLICATE_KEYS = "UPSERT_DUPLICATE_KEYS"  # marks the guard's raise_error
+
+
+def _merge_checked(
+    target: DataFrame | None, updates: DataFrame, keys: Sequence[str], table: str
+) -> DataFrame:
+    """``merge_upsert`` whose written branch carries the batch-key
+    uniqueness check: a per-key row count that fails the write when a key
+    occurs more than once, so the check costs no action of its own. NULL
+    keys form one group, as in ``groupBy``. The anti-join reads the
+    unchecked batch keys, so the check's shuffle runs once, in the branch
+    that every batch row passes through.
+
+    The ``raise_error`` must sit in a filter predicate: in a projected
+    column that is dropped before the write, Catalyst prunes it and it
+    never runs.
+    """
+    n = "__upsert_key_rows"
+    checked = (
+        updates.withColumn(n, F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(
+            F.when(
+                F.col(n) > 1,
+                F.raise_error(F.lit(f"{_DUPLICATE_KEYS} in {table}")),
+            ).otherwise(F.lit(True))
+        )
+        .drop(n)
+    )
+    if target is None:
+        return checked
+    kept = target.join(updates.select(*keys), on=list(keys), how="left_anti")
+    return kept.unionByName(checked)
+
+
 def upsert(
     spark: SparkSession,
     updates: DataFrame,
@@ -157,10 +196,13 @@ def upsert(
 ) -> None:
     """L2: idempotent keyed upsert into a parquet warehouse table.
 
-    Protocol: (1) assert batch keys unique, (2) plan merge vs current
-    table, (3) write to a fresh temp dir, (4) atomic directory swap.
-    Re-running the same batch yields a byte-identical table (idempotency —
-    the reference's core guarantee, etl/load.py:45-48).
+    Protocol: (1) plan the merge vs the current table, with the batch-key
+    uniqueness check folded into the batch side of the plan
+    (``_merge_checked``), (2) write to a fresh temp dir — the one write
+    action, which fails with ``UpsertKeyError`` on a duplicate key before
+    anything live is touched, (3) atomic directory swap. Re-running the
+    same batch yields a byte-identical table (idempotency — the
+    reference's core guarantee, etl/load.py:45-48).
 
     ``partition_by`` lays the table out hive-partitioned (e.g. fact by
     time_dim) so downstream year-filtered queries prune partitions at
@@ -169,7 +211,9 @@ def upsert(
     swapped; every other partition's files are left byte-identical on
     disk. At 100 TB a dim-sized daily update rewrites a handful of
     partition directories, not the fact table — the parquet-at-rest
-    equivalent of Delta's partition-pruned ``MERGE INTO``.
+    equivalent of Delta's partition-pruned ``MERGE INTO``. That path
+    costs one more action before the write: the ``collect`` of the
+    affected set.
 
     Affected set = partitions the update rows land in ∪ partitions that
     currently hold an updated key (a key whose partition value changes
@@ -177,52 +221,53 @@ def upsert(
     key-semi-join scan of the target — column-pruned to key+partition
     columns, far cheaper than a rewrite; callers whose keys embed the
     partition column can expect Catalyst to prune it further.
-    """
-    dup = (
-        updates.groupBy(*[F.col(k) for k in keys])
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise UpsertKeyError(f"duplicate keys in update batch for {table} on {list(keys)}")
 
+    No check here may use an ``Observation``: upsert runs inside
+    ``foreachBatch`` (``stream_upsert_foreachbatch``,
+    tests/test_incremental_load.py), and on Spark 4.1 an Observation on a
+    micro-batch frame that is joined with a parquet scan — the merge's
+    anti-join against the table — is never delivered there, so
+    ``Observation.get`` would hang.
+    """
     target = read_table(spark, warehouse_dir, table)
     path = _table_path(warehouse_dir, table)
 
     pcols = list(partition_by or [])
-    if target is None or not pcols or not _is_hive_partitioned(path, pcols[0]):
-        merged = merge_upsert(target, updates, keys)
+    try:
+        if target is None or not pcols or not _is_hive_partitioned(path, pcols[0]):
+            merged = _merge_checked(target, updates, keys, table)
 
-        def _write(tmp: str) -> None:
-            writer = merged.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(tmp)
+            def _write(tmp: str) -> None:
+                writer = merged.write.mode("overwrite")
+                if pcols:
+                    writer = writer.partitionBy(*pcols)
+                writer.parquet(tmp)
 
-        atomic_overwrite(path, _write)
-        return
-
-    _upsert_partition_scoped(spark, target, updates, path, keys, pcols)
+            atomic_overwrite(path, _write)
+        else:
+            _upsert_partition_scoped(target, updates, path, keys, pcols, table)
+    except PySparkException as exc:
+        # the key check's raise_error failed the write; the staged
+        # directory is already gone and nothing live was renamed
+        if _DUPLICATE_KEYS not in str(exc):
+            raise
+        raise UpsertKeyError(
+            f"duplicate keys in update batch for {table} on {list(keys)}"
+        ) from exc
 
 
 def _upsert_partition_scoped(
-    spark: SparkSession,
     target: DataFrame,
     updates: DataFrame,
     path: str,
     keys: Sequence[str],
     pcols: Sequence[str],
+    table: str,
 ) -> None:
     from functools import reduce
 
-    landing = updates.select(*pcols).distinct()
-    moved = (
-        target.join(updates.select(*keys), on=list(keys), how="left_semi")
-        .select(*pcols)
-        .distinct()
-    )
+    landing = updates.select(*pcols)
+    moved = target.join(updates.select(*keys), on=list(keys), how="left_semi").select(*pcols)
     affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
     if not affected:
         return  # empty batch: nothing to rewrite
@@ -232,11 +277,11 @@ def _upsert_partition_scoped(
         return reduce(lambda a, b: a & b, eqs)
 
     cond = reduce(lambda a, b: a | b, [_tuple_pred(t) for t in affected])
-    merged = merge_upsert(target.filter(cond), updates, keys)
+    merged = _merge_checked(target.filter(cond), updates, keys, table)
 
     tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    merged.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
     try:
+        merged.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
         for t in affected:
             rel = _hive_part_dir(pcols, t)
             new_dir = os.path.join(tmp, rel)

@@ -48,6 +48,14 @@ def castable(col: str, dtype: str) -> Rule:
     )
 
 
+def all_pass(rules: list[Rule]) -> Column:
+    """True ⇔ the row passes every rule — the validated side's predicate."""
+    ok = F.lit(True)
+    for r in rules:
+        ok = ok & r.predicate
+    return ok
+
+
 def validate_split(df: DataFrame, rules: list[Rule]) -> ValidationResult:
     """Split df into (validated, rejected-with-errors) per the rule set.
 
@@ -56,10 +64,7 @@ def validate_split(df: DataFrame, rules: list[Rule]) -> ValidationResult:
     ``error_details`` and stringifies the full row into ``record_data`` —
     observable parity with etl/validate.py:56-67 without the row loop.
     """
-    all_ok = F.lit(True)
-    for r in rules:
-        all_ok = all_ok & r.predicate
-
+    all_ok = all_pass(rules)
     validated = df.filter(all_ok)
 
     errors = F.concat_ws(

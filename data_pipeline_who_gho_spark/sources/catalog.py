@@ -73,6 +73,13 @@ def ntz_as_utc(col):
     )
 
 
+def nanos_as_timestamp(name: str):
+    """A parquet TIMESTAMP(NANOS) column read as epoch-nanos BIGINT (under
+    ``spark.sql.legacy.parquet.nanosAsLong``) back as a µs timestamp.
+    Integer div (not /1000.0): epoch-nanos exceed double's 2^53."""
+    return F.timestamp_micros(F.expr(f"`{name}` div 1000"))
+
+
 # Resolved-DataFrame memo: ``spark.read.parquet`` resolves the footer
 # schema eagerly (a py4j round-trip plus a file read) and every query
 # builder calls load_table 1-5 times, so a bench pass re-resolves the
@@ -135,8 +142,7 @@ def _load_table_uncached(spark: SparkSession, path: str, name: str) -> DataFrame
                     spark.conf.set(k, old)
     for c in _TS_COLUMNS.get(name, []):
         if isinstance(df.schema[c].dataType, T.LongType):
-            # integer div (not /1000.0): epoch-nanos exceed double's 2^53
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            df = df.withColumn(c, nanos_as_timestamp(c))
         elif isinstance(df.schema[c].dataType, T.TimestampNTZType):
             # fallback if the scan already materialized NTZ (e.g. a view
             # registered before this conf was set)

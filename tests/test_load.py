@@ -6,6 +6,8 @@ against a real parquet warehouse instead of the reference's mocks.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from data_pipeline_who_gho_spark.operators.load import (
@@ -47,6 +49,54 @@ def test_upsert_idempotent(spark, tmp_path):
 
 def test_upsert_duplicate_batch_keys_raises(spark, tmp_path):
     bad = spark.createDataFrame([("a", 1), ("a", 2)], "k STRING, v INT")
+    with pytest.raises(UpsertKeyError):
+        upsert(spark, bad, str(tmp_path), "t", ["k"])
+
+
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _staging_debris(root: str) -> list[str]:
+    return [
+        os.path.join(d, n)
+        for d, dirs, _files in os.walk(root)
+        for n in dirs
+        if ".tmp-" in n or ".old-" in n
+    ]
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["unpartitioned", "partitioned"])
+def test_upsert_duplicate_keys_leave_existing_table_untouched(spark, tmp_path, partition_by):
+    # the key check runs inside the staged write: it must fail before any
+    # live directory is swapped, and leave no staging directory behind
+    wh = str(tmp_path)
+    schema = "k STRING, p INT, v INT"
+    first = spark.createDataFrame([("a", 1, 1), ("b", 2, 2)], schema)
+    upsert(spark, first, wh, "t", ["k"], partition_by=partition_by)
+    before = _tree_bytes(os.path.join(wh, "t"))
+
+    # "a" twice, in two partitions, plus a key that would move partition
+    bad = spark.createDataFrame([("a", 1, 10), ("a", 2, 11), ("b", 1, 20)], schema)
+    with pytest.raises(UpsertKeyError, match="duplicate keys"):
+        upsert(spark, bad, wh, "t", ["k"], partition_by=partition_by)
+
+    assert _tree_bytes(os.path.join(wh, "t")) == before
+    assert _staging_debris(wh) == []
+    assert sorted(os.listdir(wh)) == ["t"]
+    assert sorted((r["k"], r["p"], r["v"]) for r in read_table(spark, wh, "t").collect()) == [
+        ("a", 1, 1), ("b", 2, 2)
+    ]
+
+
+def test_upsert_null_keys_count_as_one_group(spark, tmp_path):
+    bad = spark.createDataFrame([(None, 1), (None, 2)], "k STRING, v INT")
     with pytest.raises(UpsertKeyError):
         upsert(spark, bad, str(tmp_path), "t", ["k"])
 

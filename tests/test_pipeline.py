@@ -3,7 +3,10 @@ parquet; re-run idempotency; reject side-channel populated."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import types as T
 
 from data_pipeline_who_gho_spark.pipeline import PipelineConfig, run_pipeline
 from data_pipeline_who_gho_spark.schemas import RAW_OBSERVATION
@@ -104,3 +107,111 @@ def test_pipeline_mixed_null_ids_rerun_idempotent(spark, tmp_path):
     fact = spark.read.parquet(str(tmp_path / "wh" / "fact_observation"))
     ids = sorted(r["observation_id"] for r in fact.collect())
     assert ids == ["1", "ck:WHOSIS_000001:FRA:2019"]
+
+
+OBS_WITH_TS = T.StructType(
+    RAW_OBSERVATION.fields + [T.StructField("ingested_at", T.TimestampType())]
+)
+
+
+def _obs(i, ts, **kw):
+    row = {"Id": str(i), "IndicatorCode": "WHOSIS_000001", "SpatialDim": f"C{i:03d}",
+           "SpatialDimType": "COUNTRY", "TimeDim": "2019", "TimeDimType": "YEAR",
+           "NumericValue": str(70.0 + i), "Value": str(70.0 + i), "ingested_at": ts}
+    row.update(kw)
+    return row
+
+
+def test_pipeline_incremental_nanosecond_ingested_at(spark, tmp_path):
+    """pandas writes datetime64[ns] as parquet TIMESTAMP(NANOS), which the
+    session reads as BIGINT (nanosAsLong): the extract must turn it back
+    into a timestamp, or the watermark compares a long with a datetime."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from data_pipeline_who_gho_spark.sources.state import EtlStateRepository
+
+    src = tmp_path / "obs"
+    src.mkdir()
+    t1, t2 = pd.Timestamp("2024-03-01 10:00:00.123456"), pd.Timestamp("2024-03-02 09:30:00")
+    pd.DataFrame([_obs(i, t1) for i in range(3)]).to_parquet(src / "b1.parquet")
+    ts_type = pq.ParquetFile(src / "b1.parquet").schema.column(8).logical_type
+    assert "timeUnit=nanoseconds" in str(ts_type)
+
+    cfg = PipelineConfig(warehouse_dir=str(tmp_path / "wh"), source_observations=str(src))
+    state = EtlStateRepository(spark, cfg.warehouse_dir)
+    assert run_pipeline(spark, cfg)["row_count"] == 3
+    assert state.get_watermark(cfg.process_name) == t1.to_pydatetime()
+
+    # second batch: one revision of Id 0 and one new row, stamped later
+    pd.DataFrame([_obs(0, t2, Value="revised"), _obs(3, t2)]).to_parquet(src / "b2.parquet")
+    assert run_pipeline(spark, cfg)["row_count"] == 4
+    assert state.get_watermark(cfg.process_name) == t2.to_pydatetime()
+    fact = spark.read.parquet(cfg.warehouse_dir + "/fact_observation")
+    assert fact.filter("observation_id = '0'").first()["value"] == "revised"
+
+    # nothing newer than the watermark: a no-op run keeps it
+    assert run_pipeline(spark, cfg)["row_count"] == 4
+    assert state.get_watermark(cfg.process_name) == t2.to_pydatetime()
+
+
+def test_pipeline_limit_watermark_covers_only_loaded_rows(spark, tmp_path):
+    """Under ``limit`` the extract is an unordered sample. The stored
+    watermark must be the max ``ingested_at`` of the rows this run loaded
+    (read off the same snapshot the load used), so the next run picks up
+    every row the limit left out."""
+    from datetime import datetime, timedelta
+
+    from data_pipeline_who_gho_spark.sources.state import EtlStateRepository
+
+    base = datetime(2024, 1, 1)
+    stamps = {}
+    src = tmp_path / "obs"
+    for f in range(4):  # four files, every row with its own stamp
+        rows = []
+        for j in range(5):
+            i = f * 5 + j
+            stamps[str(i)] = base + timedelta(minutes=i)
+            rows.append(_obs(i, stamps[str(i)]))
+        spark.createDataFrame(rows, OBS_WITH_TS).write.mode(
+            "append"
+        ).parquet(str(src))
+
+    cfg = PipelineConfig(warehouse_dir=str(tmp_path / "wh"), source_observations=str(src), limit=7)
+    state = EtlStateRepository(spark, cfg.warehouse_dir)
+    assert run_pipeline(spark, cfg)["row_count"] == 7
+    fact = spark.read.parquet(cfg.warehouse_dir + "/fact_observation")
+    loaded = [r["observation_id"] for r in fact.collect()]
+    assert state.get_watermark(cfg.process_name) == max(stamps[i] for i in loaded)
+
+
+def test_pipeline_rejects_land_only_when_present(spark, tmp_path, raw_indicators, raw_countries):
+    from datetime import datetime
+
+    ts = datetime(2024, 1, 1)
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [_obs(1, ts), _obs(2, ts, TimeDimType=None)],  # one fact reject
+        OBS_WITH_TS,
+    ).write.parquet(str(src / "obs"))
+    spark.createDataFrame(raw_indicators).write.parquet(str(src / "ind"))
+    spark.createDataFrame(raw_countries + [{"Code": "XXX", "Title": None}]).write.parquet(
+        str(src / "cty")
+    )  # one dimension reject
+    cfg = _cfg(tmp_path, src, full_reingest=True)
+    cfg.source_observations = str(src / "obs")
+    wh = cfg.warehouse_dir
+
+    assert run_pipeline(spark, cfg)["row_count"] == 1
+    rejects = spark.read.parquet(wh + "/rejected_record")
+    details = sorted(r["error_details"] for r in rejects.collect())
+    assert details == ["TimeDimType is required", "Title is required"]
+
+    # a clean feed appends nothing: the reject sink stays as it was
+    spark.createDataFrame([_obs(3, ts)], OBS_WITH_TS).write.mode(
+        "overwrite"
+    ).parquet(str(src / "obs"))
+    spark.createDataFrame(raw_countries).write.mode("overwrite").parquet(str(src / "cty"))
+    before = sorted(os.listdir(wh + "/rejected_record"))
+    assert run_pipeline(spark, cfg)["row_count"] == 2
+    assert sorted(os.listdir(wh + "/rejected_record")) == before
