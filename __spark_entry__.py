@@ -7,12 +7,13 @@ SURVEY.md §2 for the DuckDB-oracle correctness gate.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_pipeline_who_gho_spark.plans.analytics import (  # noqa: E402
     ANALYTICS_ORACLE_SQL,

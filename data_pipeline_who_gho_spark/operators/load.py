@@ -6,12 +6,13 @@ The reference's load is a single multi-row
 re-loading the same batch is a no-op.
 
 Spark-first design: the MERGE is a **broadcast-able left-anti join +
-unionByName** over parquet-at-rest, committed with a write-temp /
-atomic-swap protocol (parquet has no transactions; the swap directory
-rename gives us all-or-nothing visibility, the closest parity to the
-reference's one-transaction upsert). On a Delta/Iceberg-backed catalog the
-same function maps 1:1 onto ``MERGE INTO`` — the call-site contract is
-identical, so swapping the table format is a one-line change here.
+unionByName** over parquet-at-rest, committed by ``atomic_overwrite``,
+the one stage-and-swap protocol every warehouse write uses (parquet has
+no transactions; a failed commit rolls back to the old table, the closest
+parity to the reference's one-transaction upsert). On a
+Delta/Iceberg-backed catalog the same function maps 1:1 onto ``MERGE
+INTO`` — the call-site contract is identical, so swapping the table
+format is a one-line change here.
 
 Scale notes: the anti-join shuffles on the upsert key unless the update
 batch is small enough to broadcast — the common case for dimension upserts
@@ -22,10 +23,12 @@ callers dedup first (T6/T8), which the pipeline driver does.
 
 from __future__ import annotations
 
+import operator
 import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,30 +44,55 @@ def _table_path(warehouse_dir: str, table: str) -> str:
     return os.path.join(warehouse_dir, table)
 
 
-def atomic_overwrite(path: str, write_fn) -> None:
-    """Write-temp → directory-swap commit, shared by upsert and
-    compaction. ``write_fn(tmp_path)`` materializes the new table into a
-    fresh temp dir; then the live directory is replaced by two renames.
+def atomic_overwrite(path: str, write_fn, rels: Sequence[str] = ("",)) -> None:
+    """The warehouse's one commit: stage the new version, swap it in.
 
-    Honesty note: the rename pair is not one atomic operation — there is
-    a sub-millisecond window where the path is absent, and a crash inside
-    it leaves only the ``.old-*`` dir (recoverable by hand). This matches
-    the engine's single-writer posture (the reference runs with
-    ``max_active_runs=1``, dags/who_gho_etl_dag.py:35); concurrent
-    writers/appenders need external coordination or a transactional
-    table format (Delta/Iceberg), onto which this call-site maps 1:1.
+    ``write_fn(new)`` writes the new version under a fresh
+    ``<path>.tmp-<id>`` stage *beside* the table. Then, per relative
+    directory in ``rels`` (``""`` = the whole table; a partition-scoped
+    upsert passes the affected ``col=value`` dirs), the live ``path/rel``
+    is retired into the stage and ``new/rel`` is renamed in — or the rel
+    is dropped when the write produced no ``new/rel`` (a partition that
+    lost its last row). Nothing is staged under the table root.
+
+    A failed write or rename undoes every rename made, so the table stays
+    at its old version, and re-raises. The stage is deleted once the
+    commit completes or is undone; if undoing fails, the stage (holding
+    the retired data) is left in place.
+
+    Honesty note: the renames are not one atomic operation. A concurrent
+    reader can see some rels swapped and others not, and a process killed
+    mid-swap leaves the retired data in the stage (recoverable by hand).
+    This matches the engine's single-writer posture (the reference runs
+    with ``max_active_runs=1``, dags/who_gho_etl_dag.py:35); concurrent
+    writers need external coordination or a transactional table format
+    (Delta/Iceberg), onto which this call-site maps 1:1.
     """
-    tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
+    stage = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    new, old = os.path.join(stage, "new"), os.path.join(stage, "old")
+    done: list[tuple[str, str]] = []  # renames made so far, undone in reverse
+
+    def move(src: str, dst: str) -> None:
+        os.rename(src, dst)
+        done.append((src, dst))
+
     try:
-        write_fn(tmp)
+        write_fn(new)
+        os.makedirs(old)
+        for i, rel in enumerate(rels):
+            live = os.path.normpath(os.path.join(path, rel))
+            fresh = os.path.normpath(os.path.join(new, rel))
+            if os.path.exists(live):
+                move(live, os.path.join(old, str(i)))
+            if os.path.exists(fresh):
+                os.makedirs(os.path.dirname(live), exist_ok=True)
+                move(fresh, live)
     except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # a failed write leaves no debris
+        for src, dst in reversed(done):
+            os.rename(dst, src)
+        shutil.rmtree(stage, ignore_errors=True)
         raise
-    old = path + ".old-" + uuid.uuid4().hex[:8]
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame | None:
@@ -198,11 +226,13 @@ def upsert(
 
     Protocol: (1) plan the merge vs the current table, with the batch-key
     uniqueness check folded into the batch side of the plan
-    (``_merge_checked``), (2) write to a fresh temp dir — the one write
-    action, which fails with ``UpsertKeyError`` on a duplicate key before
-    anything live is touched, (3) atomic directory swap. Re-running the
-    same batch yields a byte-identical table (idempotency — the
-    reference's core guarantee, etl/load.py:45-48).
+    (``_merge_checked``), (2) write it into ``atomic_overwrite``'s stage
+    beside the table — the one write action, which fails with
+    ``UpsertKeyError`` on a duplicate key before anything live is touched,
+    (3) swap the new directories in, whole table (``rels=[""]``) or the
+    affected partition dirs. Re-running the same batch yields a
+    byte-identical table (idempotency — the reference's core guarantee,
+    etl/load.py:45-48).
 
     ``partition_by`` lays the table out hive-partitioned (e.g. fact by
     time_dim) so downstream year-filtered queries prune partitions at
@@ -213,7 +243,8 @@ def upsert(
     partition directories, not the fact table — the parquet-at-rest
     equivalent of Delta's partition-pruned ``MERGE INTO``. That path
     costs one more action before the write: the ``collect`` of the
-    affected set.
+    affected set. A table that is new, unpartitioned or not yet laid out
+    hive-style is rewritten whole.
 
     Affected set = partitions the update rows land in ∪ partitions that
     currently hold an updated key (a key whose partition value changes
@@ -233,69 +264,36 @@ def upsert(
     path = _table_path(warehouse_dir, table)
 
     pcols = list(partition_by or [])
+    rels: list[str] = [""]
+    if target is not None and pcols and _is_hive_partitioned(path, pcols[0]):
+        landing = updates.select(*pcols)
+        moved = target.join(updates.select(*keys), on=list(keys), how="left_semi").select(*pcols)
+        affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
+        if not affected:
+            return  # empty batch: nothing to rewrite
+        rels = [_hive_part_dir(pcols, t) for t in affected]
+        target = target.filter(reduce(operator.or_, [
+            reduce(operator.and_, [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, t)])
+            for t in affected
+        ]))
+    merged = _merge_checked(target, updates, keys, table)
+
+    def _write(new: str) -> None:
+        writer = merged.write.mode("overwrite")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(new)
+
     try:
-        if target is None or not pcols or not _is_hive_partitioned(path, pcols[0]):
-            merged = _merge_checked(target, updates, keys, table)
-
-            def _write(tmp: str) -> None:
-                writer = merged.write.mode("overwrite")
-                if pcols:
-                    writer = writer.partitionBy(*pcols)
-                writer.parquet(tmp)
-
-            atomic_overwrite(path, _write)
-        else:
-            _upsert_partition_scoped(target, updates, path, keys, pcols, table)
+        atomic_overwrite(path, _write, rels)
     except PySparkException as exc:
-        # the key check's raise_error failed the write; the staged
-        # directory is already gone and nothing live was renamed
+        # the key check's raise_error failed the write; the stage is
+        # already gone and nothing live was renamed
         if _DUPLICATE_KEYS not in str(exc):
             raise
         raise UpsertKeyError(
             f"duplicate keys in update batch for {table} on {list(keys)}"
         ) from exc
-
-
-def _upsert_partition_scoped(
-    target: DataFrame,
-    updates: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    pcols: Sequence[str],
-    table: str,
-) -> None:
-    from functools import reduce
-
-    landing = updates.select(*pcols)
-    moved = target.join(updates.select(*keys), on=list(keys), how="left_semi").select(*pcols)
-    affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
-    if not affected:
-        return  # empty batch: nothing to rewrite
-
-    def _tuple_pred(t):
-        eqs = [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, t)]
-        return reduce(lambda a, b: a & b, eqs)
-
-    cond = reduce(lambda a, b: a | b, [_tuple_pred(t) for t in affected])
-    merged = _merge_checked(target.filter(cond), updates, keys, table)
-
-    tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    try:
-        merged.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
-        for t in affected:
-            rel = _hive_part_dir(pcols, t)
-            new_dir = os.path.join(tmp, rel)
-            live_dir = os.path.join(path, rel)
-            old = live_dir + ".old-" + uuid.uuid4().hex[:8]
-            if os.path.exists(live_dir):
-                os.rename(live_dir, old)
-            if os.path.exists(new_dir):
-                os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                os.rename(new_dir, live_dir)
-            # else: the partition lost its last row (key moved away) — drop it
-            shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def append_rejects(rejected: DataFrame, warehouse_dir: str, table: str = "rejected_record") -> None:

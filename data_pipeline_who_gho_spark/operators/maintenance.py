@@ -4,9 +4,9 @@ Append-heavy sinks (the reject sink, per-batch incremental loads,
 streaming foreachBatch upserts) accumulate many small parquet files;
 at cluster scale that degrades scan parallelism planning (one task per
 tiny file) and NameNode/object-store metadata pressure. ``compact_table``
-rewrites a table directory to a target number of files using the same
-write-temp → directory-swap commit as ``operators/load.upsert``
-(``load.atomic_overwrite`` — see its honesty note: single-writer
+rewrites a table directory to a target number of files through the
+warehouse's one commit, ``load.atomic_overwrite`` (stage beside the
+table, swap, roll back on failure — see its honesty note: single-writer
 posture; concurrent appends during a compaction need external
 coordination or a transactional table format).
 

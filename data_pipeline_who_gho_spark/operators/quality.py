@@ -11,9 +11,11 @@ count with no data movement beyond one scalar per partition.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,44 +31,47 @@ def check_not_empty(df: DataFrame, name: str = "table") -> int:
     return n
 
 
+def _dq_metrics(keys: Sequence[str], caller: str) -> list[Column]:
+    """Q1/Q2 as two aggregate columns, ``row_count`` and ``null_key_rows``
+    (rows with a null in any key column), so every check reads both from
+    one aggregation."""
+    if not keys:
+        raise ValueError(f"{caller} requires at least one key column")
+    null_key = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.count(F.when(null_key, F.lit(1))).alias("null_key_rows"),
+    ]
+
+
+def _raise_on_violation(m, keys: Sequence[str], name: str) -> dict:
+    """Raise :class:`DataQualityError` if the metrics show an empty table
+    (when ``row_count`` was measured) or null keys; else return them."""
+    if "row_count" in m and m["row_count"] == 0:
+        raise DataQualityError(f"DQ failed: {name} is empty")
+    if m["null_key_rows"]:
+        raise DataQualityError(
+            f"DQ failed: {name} has {m['null_key_rows']} rows with null keys {list(keys)}"
+        )
+    return {k: int(v) for k, v in m.items()}
+
+
 def check_no_null_keys(df: DataFrame, keys: Sequence[str], name: str = "table") -> int:
     """Q2: zero rows with null in any key column (who_gho_etl_dag.py:200-206).
 
     Single pass: conditional count instead of a filter+count re-scan.
     """
-    if not keys:
-        raise ValueError("check_no_null_keys requires at least one key column")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    bad = df.select(F.count(F.when(cond, F.lit(1))).alias("bad")).first()["bad"]
-    if bad:
-        raise DataQualityError(f"DQ failed: {name} has {bad} rows with null keys {list(keys)}")
-    return int(bad)
+    null_key_rows = _dq_metrics(keys, "check_no_null_keys")[1]
+    row = df.select(null_key_rows).first().asDict()
+    return _raise_on_violation(row, keys, name)["null_key_rows"]
 
 
 def run_dq_checks(df: DataFrame, keys: Sequence[str], name: str = "fact_observation") -> dict:
     """The reference's full DQ task (Q1 + Q2), fused into ONE scan: both
     metrics come from a single aggregation instead of the reference's two
     SQL statements — same fail-fast contract, half the table reads."""
-    if not keys:
-        raise ValueError("run_dq_checks requires at least one key column")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    row = df.select(
-        F.count(F.lit(1)).alias("row_count"),
-        F.count(F.when(cond, F.lit(1))).alias("null_key_rows"),
-    ).first()
-    if row["row_count"] == 0:
-        raise DataQualityError(f"DQ failed: {name} is empty")
-    if row["null_key_rows"]:
-        raise DataQualityError(
-            f"DQ failed: {name} has {row['null_key_rows']} rows with null keys {list(keys)}"
-        )
-    return {"row_count": row["row_count"], "null_key_rows": int(row["null_key_rows"])}
+    row = df.select(*_dq_metrics(keys, "run_dq_checks")).first().asDict()
+    return _raise_on_violation(row, keys, name)
 
 
 def observed_dq(df: DataFrame, keys: Sequence[str], name: str = "fact_observation"):
@@ -81,27 +86,10 @@ def observed_dq(df: DataFrame, keys: Sequence[str], name: str = "fact_observatio
     """
     from pyspark.sql import Observation
 
-    if not keys:
-        raise ValueError("observed_dq requires at least one key column")
     obs = Observation(f"dq_{name}")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("row_count"),
-        F.count(F.when(cond, F.lit(1))).alias("null_key_rows"),
-    )
+    observed = df.observe(obs, *_dq_metrics(keys, "observed_dq"))
 
     def finish() -> dict:
-        m = obs.get
-        if m["row_count"] == 0:
-            raise DataQualityError(f"DQ failed: {name} is empty")
-        if m["null_key_rows"]:
-            raise DataQualityError(
-                f"DQ failed: {name} has {m['null_key_rows']} rows with null keys {list(keys)}"
-            )
-        return dict(m)
+        return _raise_on_violation(obs.get, keys, name)
 
     return observed, finish

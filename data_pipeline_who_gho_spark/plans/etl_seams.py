@@ -31,7 +31,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.load import append_rejects
+from ..operators.load import append_rejects, atomic_overwrite
 from ..operators.migrate import migrate_table
 from ..operators.transform import clean_indicators, records_to_df
 from ..operators.validate import observation_rules, validate_split
@@ -380,8 +380,7 @@ def _json_obs_source(spark: SparkSession, sf_dir: str) -> str:
         raw = _raw_observations(spark, sf_dir).filter(
             F.col("Id").cast("long") % 7 == 0
         )
-        raw.write.mode("overwrite").json(path + ".tmp")
-        os.rename(path + ".tmp", path)
+        atomic_overwrite(path, lambda new: raw.write.mode("overwrite").json(new))
     return path
 
 

@@ -8,19 +8,19 @@ implement the declared semantics for real, per SURVEY §7).
 Spark-first shape: a tiny parquet-backed key→state table, read/written
 driver-side (state is O(processes), never data-sized). Single-writer per
 process is assumed (the reference's IntegrityError retry handles exactly
-one concurrent bootstrap insert; our atomic directory swap gives the same
-observable guarantee).
+one concurrent bootstrap insert; committing through the warehouse's
+``atomic_overwrite`` gives the same observable guarantee).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
+
+from ..operators.load import atomic_overwrite
 
 
 class EtlStateRepository:
@@ -42,7 +42,7 @@ class EtlStateRepository:
     # part file, identical column names/types incl. the µs UTC
     # timestamp), so Spark-side readers of the state table
     # (etl_state_bootstrap's oracle surface) see the same schema, and
-    # the atomic directory swap keeps the single-writer guarantee.
+    # the warehouse's commit keeps the single-writer guarantee.
 
     _ARROW_SCHEMA = None  # built lazily (pyarrow import cost)
 
@@ -73,11 +73,14 @@ class EtlStateRepository:
 
         if not os.path.exists(self.path):
             return {}
-        table = pq.read_table(self.path)
+        # Reading to the µs-UTC schema also reads the naive INT96
+        # timestamps of state files the older Spark path wrote (INT96 has
+        # no zone flag) as the UTC instants they hold.
+        table = pq.read_table(self.path, schema=self._schema())
         out: dict[str, dict] = {}
         for r in table.to_pylist():
             ts = r["last_successful_run_at"]
-            if ts is not None and ts.tzinfo is not None:
+            if ts is not None:
                 ts = ts.astimezone().replace(tzinfo=None)  # aware -> OS-local naive
             out[r["process_name"]] = {
                 "last_successful_run_at": ts,
@@ -111,14 +114,12 @@ class EtlStateRepository:
             ],
             schema=self._schema(),
         )
-        tmp = self.path + ".tmp-" + uuid.uuid4().hex[:8]
-        os.makedirs(tmp, exist_ok=True)
-        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-        old = self.path + ".old-" + uuid.uuid4().hex[:8]
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+
+        def _write(new: str) -> None:
+            os.makedirs(new)
+            pq.write_table(table, os.path.join(new, "part-00000.parquet"))
+
+        atomic_overwrite(self.path, _write)
 
     # -- API (parity with etl/state.py) ------------------------------------
 

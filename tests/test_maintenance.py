@@ -78,7 +78,7 @@ def test_bench_canary_plan_is_frozen(spark):
     legacy17_per_canary incomparable between rounds)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
     from pyspark.sql import functions as F

@@ -4,6 +4,8 @@ end, resume skips completed work, retry survives transient errors."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from data_pipeline_who_gho_spark.sources.paged import (
@@ -100,3 +102,38 @@ def test_state_roundtrip(spark, tmp_path):
     assert state.get_watermark("p1") is not None
     state.clear_checkpoint("p1")
     assert state.get_state("p1")["checkpoint_state"] is None
+
+
+def test_state_legacy_int96_watermark_reads_as_utc(spark, tmp_path):
+    # state files the older Spark writer produced carry the watermark as
+    # INT96, which reads back naive; it is a UTC instant, so a host in
+    # another zone must see the same instant, not the UTC wall time
+    import time
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    instant = datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    legacy = pa.table({
+        "process_name": ["p"],
+        "last_successful_run_at": pa.array([instant], pa.timestamp("us", tz="UTC")),
+        "checkpoint_state": pa.array([None], pa.string()),
+    })
+    os.makedirs(tmp_path / "etl_state")
+    pq.write_table(legacy, str(tmp_path / "etl_state" / "part-00000.parquet"),
+                   use_deprecated_int96_timestamps=True)
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        got = EtlStateRepository(spark, str(tmp_path)).get_watermark("p")
+        assert got == instant.astimezone().replace(tzinfo=None)
+        assert got == datetime(2024, 1, 1, 22, 4, 5)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()

@@ -15,9 +15,10 @@ Usage: python tools/plan_census.py [sf_dir] [out_json]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from data_pipeline_who_gho_spark.session import get_spark

@@ -24,10 +24,11 @@ or any window query fails the gate.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WINDOW = 50
 

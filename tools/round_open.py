@@ -20,11 +20,12 @@ Exit code is non-zero if any invariant fails.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WINDOW = 50
 

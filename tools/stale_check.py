@@ -29,10 +29,11 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from data_pipeline_who_gho_spark import caching
