@@ -1,57 +1,92 @@
-"""Bounded app-scoped persist cache, shared by plans that reference an
-expensive invariant DataFrame several times in one query (the shingle
-table across dedup queries, PageRank's edge⋈degree relation across
-iterations).
+"""The package's one plan memo: reusable artifacts (the shingle table,
+BPE merges, PageRank's edge relation, ranged frames, ...) keyed on the
+version of the inputs they were built from.
 
-One policy, one place: memoize per (applicationId, sf_dir)-style key,
-evict + unpersist the oldest entry beyond ``limit`` so a long-lived
-session sweeping many scale factors never pins storage forever.
+A key is ``(applicationId, name, input version, plan)``.  The input
+version is ``(path, mtime_ns, size)`` of every file the site reads, so a
+rewritten input misses and rebuilds; ``plan`` is whatever identity the
+site already has (its ``sf_dir``, a ``semanticHash`` plus arguments).
+On a miss the entries of the same name and plan under another version
+are dropped first: they are stale, and a persisted stale frame would
+otherwise be served to the rebuild by Spark's CacheManager, which
+matches cached data by plan, not by file contents.  Each name keeps at
+most ``PERSIST_CACHE_LIMIT`` entries (least recently used goes first).
+That bound must exceed the number of ranked frames lazily outstanding
+in one composed plan: an evicted ranged frame is unpersisted, and
+``operators/rank.py`` relies on its persisted frame to see one set of
+range boundaries.  Evicting or clearing an entry unpersists every frame
+it holds; a ``localCheckpoint`` is released by dropping the reference.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Hashable, MutableMapping
+import os
+import threading
+from collections.abc import Callable, Hashable, Iterable, MutableMapping
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# Explicit registry of every module-level persisted-frame cache.  Tools
-# that must hash plans hermetically (tools/stale_check.py) or release
-# executor storage at a gate boundary (tools/check_correctness.py)
-# iterate THIS list; scanning module vars for a ``*_CACHE`` suffix is
-# kept only as an AUDIT (``unregistered_caches``) so a cache that
-# forgets to register fails loudly instead of silently reintroducing
-# order-dependent plan-hash drift.
-PLAN_CACHES: list[MutableMapping] = []
-
-# Shared eviction policy for the persisted-frame caches (VERDICT r07
-# item 7): the limit is NOT sized from a registered-consumer tally —
-# that number goes stale the round after it's written.  It bounds the
-# number of persisted frames that can be LAZILY OUTSTANDING inside one
-# composed plan before any action runs (each distinct global_rank /
-# grouped_running_sum call site in a single composition holds one).
-# Compositions in this engine are a handful of ranked frames deep at
-# most; 16 is generous headroom for that DEPTH, independent of how many
-# queries the registry carries, because lifecycle pressure is handled
-# elsewhere: eviction unpersists, and the gate and scaling harnesses
-# (tools/check_correctness.py, tools/strong_scaling.py) call
-# clear_plan_caches() at their boundaries, so steady-state storage is
-# bounded per plan, not per session.  (bench.py deliberately does NOT
-# clear between its interleaved passes — cross-pass cache hits ARE the
-# steady state a long-lived session measures.)
+_MEMO: dict[tuple, object] = {}
+PLAN_CACHES: list[MutableMapping] = [_MEMO]  # the memo, for callers that size it
 PERSIST_CACHE_LIMIT = 16
+_LOCK = threading.Lock()
 
 
-def register_plan_cache(cache: MutableMapping) -> MutableMapping:
-    """Register a module-level cache dict at its definition site:
-    ``_FOO_CACHE = register_plan_cache({})``."""
-    PLAN_CACHES.append(cache)
-    return cache
+def input_version(inputs: Iterable[str | DataFrame]) -> tuple:
+    """``(path, mtime_ns, size)`` of every file under ``inputs``: a path
+    names a file or a directory (walked); a DataFrame contributes its
+    ``inputFiles()``.  A missing file reads as ``(path, -1, -1)``."""
+    files: set[str] = set()
+    for src in inputs:
+        if isinstance(src, DataFrame):
+            files.update(unquote(urlparse(u).path) for u in src.inputFiles())
+        elif os.path.isdir(src):
+            files.update(os.path.join(d, n) for d, _, ns in os.walk(src) for n in ns)
+        else:
+            files.add(src)
+    out = []
+    for path in sorted(files):
+        try:
+            st = os.stat(path)
+            out.append((path, st.st_mtime_ns, st.st_size))
+        except OSError:
+            out.append((path, -1, -1))
+    return tuple(out)
+
+
+def memo(
+    spark: SparkSession,
+    name: str,
+    inputs: Iterable[str | DataFrame],
+    build: Callable[[], object],
+    plan: Hashable = None,
+):
+    """``build()`` once per (application, ``name``, input version,
+    ``plan``); sites that want the result persisted persist it in
+    ``build``."""
+    key = (spark.sparkContext.applicationId, name, input_version(inputs), plan)
+    with _LOCK:
+        if key in _MEMO:
+            _MEMO[key] = val = _MEMO.pop(key)  # refresh recency
+            return val
+        mine = [k for k in _MEMO if k[1] == name]
+        rest = [k for k in mine if k[3] != plan]
+        stale = [k for k in mine if k[3] == plan]
+        for k in stale + rest[: max(0, len(rest) + 1 - PERSIST_CACHE_LIMIT)]:
+            _unpersist_value(_MEMO.pop(k))
+    # built outside the lock: builds nest (the arrays build the shingles)
+    # and run Spark jobs.  A thread that lost the race to insert returns
+    # the winner's value; its own persisted duplicate shares the winner's
+    # cache entry (the CacheManager matches by plan), so nothing leaks.
+    val = build()
+    with _LOCK:
+        return _MEMO.setdefault(key, val)
 
 
 def _unpersist_value(val) -> None:
-    """Unpersist every DataFrame reachable from a cache value (values
-    may be bare frames or tuples/lists of them, e.g. the BPE learn
-    cache's ``(merge_frames, state)``)."""
+    """Unpersist every DataFrame reachable from a memo value (a bare
+    frame or a tuple/list of them, e.g. BPE's ``(merges, state)``)."""
     if isinstance(val, DataFrame):
         try:
             val.unpersist()
@@ -63,24 +98,23 @@ def _unpersist_value(val) -> None:
 
 
 def clear_plan_caches() -> None:
-    """Drop every registered cache entry, unpersisting held frames.
-    Callers that also want Spark's CacheManager emptied follow up with
+    """Drop every memo entry, unpersisting held frames.  Callers that
+    also want Spark's CacheManager emptied follow up with
     ``spark.catalog.clearCache()``."""
-    for cache in PLAN_CACHES:
-        for val in list(cache.values()):
+    with _LOCK:
+        for val in _MEMO.values():
             _unpersist_value(val)
-        cache.clear()
+        _MEMO.clear()
 
 
 def unregistered_caches() -> list[str]:
-    """Audit: module-level ``*_CACHE`` dicts in this package that are
-    NOT in ``PLAN_CACHES`` (by identity). Non-empty means someone added
-    a cache without registering it — stale_check refuses to run.
+    """Audit: module-level ``*_CACHE`` / ``*_MEMO`` dicts in this package
+    other than the memo above and the catalog's mtime-keyed table-handle
+    memo.  Non-empty means someone added a memo beside ``memo`` — it
+    would escape ``clear_plan_caches`` and the input versioning.
 
-    Walks the WHOLE package with pkgutil and imports every module
-    first: a cache in a module nothing has imported yet (e.g. a plans
-    module written but not registered in __spark_entry__) must not
-    escape the audit just because it wasn't in sys.modules."""
+    Imports every module of the package first, so a memo in a module
+    nothing has imported yet cannot escape the audit."""
     import importlib
     import pkgutil
     import sys
@@ -93,30 +127,12 @@ def unregistered_caches() -> list[str]:
         except Exception:  # unimportable module is a different failure
             pass
 
-    ids = {id(c) for c in PLAN_CACHES}
-    missing = []
-    for mod_name, mod in list(sys.modules.items()):
-        if not mod_name.startswith("data_pipeline_who_gho_spark"):
-            continue
-        for attr, val in vars(mod).items():
-            if isinstance(val, dict) and attr.endswith("_CACHE") and id(val) not in ids:
-                missing.append(f"{mod_name}.{attr}")
-    return sorted(missing)
-
-
-def bounded_persist_cache(
-    cache: MutableMapping,
-    key: Hashable,
-    build: Callable[[], DataFrame],
-    limit: int = 4,
-) -> DataFrame:
-    """Return ``cache[key]``, building + persisting it on a miss and
-    evicting (with unpersist) the oldest entries beyond ``limit``."""
-    df = cache.get(key)
-    if df is not None:
-        return df
-    while len(cache) >= limit:
-        cache.pop(next(iter(cache))).unpersist()
-    df = build().persist()
-    cache[key] = df
-    return df
+    allowed = {id(_MEMO), id(sys.modules[pkg.__name__ + ".sources.catalog"]._TABLE_MEMO)}
+    return sorted(
+        f"{mod_name}.{attr}"
+        for mod_name, mod in list(sys.modules.items())
+        if mod_name.startswith(pkg.__name__)
+        for attr, val in vars(mod).items()
+        if isinstance(val, dict) and attr.endswith(("_CACHE", "_MEMO"))
+        and id(val) not in allowed
+    )

@@ -20,8 +20,9 @@ evaluation re-SAMPLES its own boundaries (the range partitioner's
 sampling is seeded per RDD instance) and the offsets no longer match
 the local ranks — observed in the wild as a run-to-run nondeterministic
 rank shift in the round-5 full-registry sf1 gate (train_order_shuffle,
-one 318-row slide). The ranged frame is therefore PERSISTED (bounded
-app-scoped cache, unpersist on eviction): both passes then read the one
+one 318-row slide). The ranged frame is therefore PERSISTED (the package memo,
+``caching.memo``, keyed on the input files' version and the plan's
+semantic hash; unpersist on eviction): both passes then read the one
 materialization, which also makes repeated invocations of the same
 rank free. The persisted projection is rank-input-narrow (keys +
 carried columns), not corpus text.
@@ -36,9 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import PERSIST_CACHE_LIMIT, bounded_persist_cache, register_plan_cache
-
-_RANGED_CACHE: dict = register_plan_cache({})
+from ..caching import memo
 
 
 def _guard_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
@@ -55,6 +54,20 @@ def _guard_reserved(df: DataFrame, reserved: set[str], op: str) -> None:
         )
 
 
+def _ranged(
+    df: DataFrame, name: str, range_cols: list[str], parts: int, args: tuple
+) -> DataFrame:
+    """``df`` range-partitioned on ``range_cols`` with its partition id,
+    persisted through the memo (keyed on the input files' version, the
+    plan's semantic hash, the call's arguments and ``parts``)."""
+    return memo(
+        df.sparkSession, name, [df],
+        lambda: df.repartitionByRange(parts, *[F.col(c) for c in range_cols])
+        .withColumn("__pid", F.spark_partition_id()).persist(),
+        (df.semanticHash(), *args, parts),
+    )
+
+
 def global_rank(
     df: DataFrame, order_cols: list[str], rank_col: str = "rn", partitions: int | None = None
 ) -> DataFrame:
@@ -64,25 +77,7 @@ def global_rank(
     parts = partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    try:
-        sig = df.semanticHash()
-    except Exception:  # pragma: no cover - API fallback
-        sig = hash(df._jdf.queryExecution().analyzed().toString())
-    key = (df.sparkSession.sparkContext.applicationId, sig, tuple(order_cols), parts)
-    # limit policy lives in caching.PERSIST_CACHE_LIMIT (sized to the
-    # depth of one composed plan, not to a consumer tally): an evicted
-    # ranged frame is unpersisted, and an unpersisted ranged frame
-    # re-exposes the re-sampled-boundary nondeterminism this cache
-    # exists to prevent — so the limit must exceed the number of ranked
-    # frames lazily outstanding in a single composition.
-    ranged = bounded_persist_cache(
-        _RANGED_CACHE,
-        key,
-        lambda: df.repartitionByRange(
-            parts, *[F.col(c) for c in order_cols]
-        ).withColumn("__pid", F.spark_partition_id()),
-        limit=PERSIST_CACHE_LIMIT,
-    )
+    ranged = _ranged(df, "global_rank", order_cols, parts, (tuple(order_cols),))
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     local = ranged.withColumn("__lrn", F.row_number().over(w))
     counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
@@ -95,9 +90,6 @@ def global_rank(
         .withColumn(rank_col, (F.col("__lrn") + F.col("__off")).cast("long"))
         .drop("__pid", "__lrn")
     )
-
-
-_GROUPED_SUM_CACHE: dict = register_plan_cache({})
 
 
 def grouped_running_sum(
@@ -140,25 +132,9 @@ def grouped_running_sum(
     parts = partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    try:
-        sig = df.semanticHash()
-    except Exception:  # pragma: no cover - API fallback
-        sig = hash(df._jdf.queryExecution().analyzed().toString())
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        sig,
-        tuple(group_cols),
-        tuple(order_cols),
-        val_col,
-        parts,
-    )
-    ranged = bounded_persist_cache(
-        _GROUPED_SUM_CACHE,
-        key,
-        lambda: df.repartitionByRange(
-            parts, *[F.col(c) for c in group_cols + order_cols]
-        ).withColumn("__pid", F.spark_partition_id()),
-        limit=PERSIST_CACHE_LIMIT,
+    ranged = _ranged(
+        df, "grouped_running_sum", group_cols + order_cols, parts,
+        (tuple(group_cols), tuple(order_cols), val_col),
     )
     w_local = (
         Window.partitionBy("__pid", *group_cols)

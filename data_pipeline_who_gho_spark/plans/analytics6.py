@@ -39,16 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import bounded_persist_cache, register_plan_cache
+from ..caching import memo
 from ..operators.interval import interval_overlap_join
 from ..operators.layout import morton2, morton2_sql
-from ..sources.catalog import load_table, spread_by_hash
+from ..sources.catalog import load_table, spread_by_hash, table_path
 
 EWMA_ALPHA = 0.125  # exact binary fraction: 1/8
-
-# app-scoped cache of PageRank's invariant (edges ⋈ degree) relation —
-# referenced by every iteration; policy shared via caching.py
-_EDGE_CACHE: dict = register_plan_cache({})
 
 # fixed-point rank scale. Overflow headroom: a node's incoming mass is
 # bounded by the total (n_nodes · PR_SCALE), and the damping step
@@ -121,12 +117,12 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("snode").alias("src"), F.col("cnode").alias("dst"))
         )
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # the invariant per-iteration relation: (src, dst, deg(src))
-        return edges.join(deg, "src")
+        # the invariant per-iteration relation: (src, dst, deg(src)),
+        # referenced by every iteration
+        return edges.join(deg, "src").persist()
 
-    edges_deg = bounded_persist_cache(
-        _EDGE_CACHE, (spark.sparkContext.applicationId, sf_dir), build
-    )
+    inputs = [table_path(sf_dir, "orders"), table_path(sf_dir, "lineitem")]
+    edges_deg = memo(spark, "pagerank_edges", inputs, build, sf_dir)
     deg_nodes = edges_deg.select("src").distinct()
     ranks = deg_nodes.select(F.col("src").alias("node"), F.lit(PR_SCALE).cast("long").alias("rank"))
     # r14 examined, NOT taken: an explicit size-guarded F.broadcast(ranks)

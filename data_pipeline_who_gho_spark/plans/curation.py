@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import bounded_persist_cache, register_plan_cache
+from ..caching import memo
 from ..functions import text as TX
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
 from .extensions import _sql_lang_id, _sql_n_tokens, _sql_quality
 
 FUNNEL_MIN_TOKENS = 30
@@ -362,8 +362,6 @@ WHERE (CASE WHEN a.o_orderkey IS NULL THEN 'added'
 
 
 _SEM_TILE_ROWS = 1024  # target vectors per chunk (bounds the per-row arrays)
-_BLOCKED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_plan_cache({})
-_BUCKETED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_plan_cache({})
 
 
 def _tile_gemm(tiles: DataFrame, threshold: float) -> DataFrame:
@@ -428,8 +426,9 @@ def embed_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     enormous (non-dup pairs ≲ 0.75, injected dups = 1.0), so the emitted
     pair set and round(cos, 6) values are engine-stable.
 
-    Persisted per (application, sf_dir): ``semantic_dedup_reps`` and the
-    registered query itself both consume the pair set.
+    Persisted and memoized on the embeddings version:
+    ``semantic_dedup_reps`` and the registered query itself both consume
+    the pair set.
     """
     from .extras import _vec_corpus
 
@@ -452,11 +451,9 @@ def embed_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.ids").alias("ids_b"),
             F.col("b.vecs").alias("vecs_b"),
         )
-        return _tile_gemm(tiles, NEARDUP_COS)
+        return _tile_gemm(tiles, NEARDUP_COS).persist()
 
-    return bounded_persist_cache(
-        _BLOCKED_PAIRS_CACHE, (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo(spark, "blocked_pairs", [table_path(sf_dir, "embeddings")], build, sf_dir)
 
 
 def embed_neardup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,11 +483,9 @@ def embed_neardup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding, exactly like ``dedup_minhash_lsh``'s banding parameters.
     """
     def build() -> DataFrame:
-        return _tile_gemm(_bucketed_tiles(spark, sf_dir), NEARDUP_COS)
+        return _tile_gemm(_bucketed_tiles(spark, sf_dir), NEARDUP_COS).persist()
 
-    return bounded_persist_cache(
-        _BUCKETED_PAIRS_CACHE, (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo(spark, "bucketed_pairs", [table_path(sf_dir, "embeddings")], build, sf_dir)
 
 
 def _bucketed_tiles(

@@ -6,7 +6,7 @@ plus an ORC round-trip proving the columnar path beyond parquet.
 
 All three CSV/ORC datasets are synthesized deterministically from the
 ``documents`` fixture with Spark-native column expressions, written
-once per (app, sf) to scratch (the ``etl_seams`` memo pattern), and
+once per documents version to scratch (the ``etl_seams`` memo pattern), and
 read back through Spark's REAL readers — ``spark.read.csv`` /
 ``spark.read.orc`` — so the JVM parser, not a Python re-implementation,
 is what the oracle checks.
@@ -87,7 +87,7 @@ def _quote(col: F.Column) -> F.Column:
 
 def _write_csv_dataset(spark: SparkSession, sf_dir: str, name: str,
                        payload: F.Column) -> str:
-    """Materialize the messy CSV once per (app, sf): one physical text
+    """Materialize the messy CSV once per documents version: one physical text
     line per CSV row (multiline payloads span lines naturally), rows
     with doc_id % 13 == 5 corrupted with a non-numeric id."""
     path = os.path.join(
@@ -107,7 +107,7 @@ def _write_csv_dataset(spark: SparkSession, sf_dir: str, name: str,
         docs.select(line.alias("value")).write.mode("overwrite").text(path)
         return spark.range(1)  # memo sentinel: the side effect ran
 
-    _memo(spark, sf_dir, f"csvwrite-{name}", build)
+    _memo(spark, sf_dir, f"csvwrite-{name}", ["documents"], build)
     return path
 
 
@@ -128,7 +128,7 @@ def _read_csv(spark: SparkSession, path: str, multiline: bool) -> DataFrame:
 
 def _parsed_csv(spark: SparkSession, sf_dir: str, name: str,
                 payload: F.Column, multiline: bool) -> DataFrame:
-    """The parsed dataset, MATERIALIZED once per (app, sf, variant).
+    """The parsed dataset, MATERIALIZED once per (documents version, variant).
     Required, not an optimization: Spark disallows queries whose
     column pruning leaves only `_corrupt_record` referenced from a raw
     CSV scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
@@ -143,7 +143,7 @@ def _parsed_csv(spark: SparkSession, sf_dir: str, name: str,
             eager=True
         )
 
-    return _memo(spark, sf_dir, f"csvparse-{name}", build)
+    return _memo(spark, sf_dir, f"csvparse-{name}", ["documents"], build)
 
 
 def csv_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,7 +227,7 @@ def _orc_path(spark: SparkSession, sf_dir: str) -> str:
         ).orc(path)
         return spark.range(1)
 
-    _memo(spark, sf_dir, "orcwrite", build)
+    _memo(spark, sf_dir, "orcwrite", ["documents"], build)
     return path
 
 
@@ -410,7 +410,7 @@ def _json_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(line.alias("value")).write.mode("overwrite").text(path)
         return spark.range(1)
 
-    _memo(spark, sf_dir, "jsonlwrite", build)
+    _memo(spark, sf_dir, "jsonlwrite", ["documents"], build)
 
     def parse() -> DataFrame:
         return (
@@ -424,7 +424,7 @@ def _json_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return _memo(spark, sf_dir, "jsonlparse", parse)
+    return _memo(spark, sf_dir, "jsonlparse", ["documents"], parse)
 
 
 def json_scan_reject_split(spark: SparkSession, sf_dir: str) -> DataFrame:

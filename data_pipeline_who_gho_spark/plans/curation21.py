@@ -18,7 +18,7 @@ binding) — boundary stated in the codec module.
 common format with zero coverage; no spark-xml in this environment).
 The dataset is LINE-DELIMITED XML FRAGMENTS (one ``<url>`` element
 per line — the streamable "XML lines" form a sitemap/RSS feed
-producer ships), written once per (app, sf) to scratch with
+producer ships), written once per documents version to scratch with
 Spark-native column expressions and read back through
 ``spark.read.format("binaryFile")`` + an Arrow-batched rowTag scan:
 fragments are delimited by the ``<url …</url>`` rowTag (exactly
@@ -183,7 +183,7 @@ _XML_NOTE_ESC_SQL = "substr(md5(text), 1, 16) || ' &lt;&amp;&gt; ' || lang"
 
 
 def _write_xml_dataset(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the fragment lines once per (app, sf): one
+    """Materialize the fragment lines once per documents version: one
     ``<url>`` element per physical line; rows with doc_id % 13 == 5
     carry ``</lo>`` for ``</loc>`` (a mismatched close tag — the
     fragment boundary stays findable, the inner parse fails)."""
@@ -215,7 +215,7 @@ def _write_xml_dataset(spark: SparkSession, sf_dir: str) -> str:
         docs.select(frag.alias("value")).write.mode("overwrite").text(path)
         return spark.range(1)  # memo sentinel: the side effect ran
 
-    _memo(spark, sf_dir, "xmlwrite", build)
+    _memo(spark, sf_dir, "xmlwrite", ["documents"], build)
     return path
 
 

@@ -6,12 +6,15 @@ config hydration) — each as a deterministic fixture query with a DuckDB
 oracle, so the external correctness gate exercises the *library*
 implementation end to end.
 
-Queries with side effects (warehouse writes, state files) are cached
-per (application, sf): the gate / plan census / bench loops re-request
-the same query many times per session, and the choreography (e.g. the
-idempotency double-run in ``etl_pipeline_e2e``) must not re-execute on
-every plan inspection. Scratch directories live for the application and
-are removed at interpreter exit.
+Queries with side effects (warehouse writes, state files) go through
+the package memo (``caching.memo``), keyed on the version of the
+fixture tables they read: the gate / plan census / bench loops
+re-request the same query many times per session, and the choreography
+(e.g. the idempotency double-run in ``etl_pipeline_e2e``) must not
+re-execute on every plan inspection. Every build writes into a fresh
+scratch directory, so a rebuild never meets an earlier build's output.
+Scratch directories live for the application and are removed at
+interpreter exit.
 
 Reference parity notes live on each query: the retry loop is
 ``etl/extract.py:30`` (tenacity), the migration ladder ``etl/load.py:
@@ -31,24 +34,24 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.load import append_rejects, atomic_overwrite
+from ..caching import memo
+from ..operators.load import append_rejects
 from ..operators.migrate import migrate_table
 from ..operators.transform import clean_indicators, records_to_df
 from ..operators.validate import observation_rules, validate_split
 from ..pipeline import PipelineConfig, run_pipeline
 from ..schemas import RAW_OBSERVATION
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
 from ..sources.paged import fetch_paged
 from ..sources.state import EtlStateRepository
 from ..sources.testing import flaky_fetcher, pages_fetcher
 from .etl_ops import _raw_observations
 
 # ---------------------------------------------------------------------------
-# app-scoped scratch space + per-(app, sf, query) result memo
+# app-scoped scratch space + the memo keyed on the tables a query reads
 # ---------------------------------------------------------------------------
 
 _SCRATCH: dict[str, str] = {}
-_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _scratch(spark: SparkSession) -> str:
@@ -60,16 +63,9 @@ def _scratch(spark: SparkSession) -> str:
     return _SCRATCH[app]
 
 
-def _memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _MEMO:
-        while len(_MEMO) > 64:
-            # evict oldest-inserted entries one at a time — a wholesale
-            # clear() would re-run every warehouse-writing choreography
-            # at once on the next sweep
-            _MEMO.pop(next(iter(_MEMO)))
-        _MEMO[key] = build()
-    return _MEMO[key]
+def _memo(spark: SparkSession, sf_dir: str, name: str, tables: list[str], build):
+    """``caching.memo`` keyed on the fixture ``tables`` the build reads."""
+    return memo(spark, name, [table_path(sf_dir, t) for t in tables], build, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +127,7 @@ def etl_fetch_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(limited, unlimited)], "n_limited BIGINT, n_unlimited BIGINT"
         )
 
-    return _memo(spark, sf_dir, "fetch_limit", build)
+    return _memo(spark, sf_dir, "fetch_limit", [], build)
 
 
 # 10 keys × the fetcher's 5 records/key; the oracle DERIVES both
@@ -165,7 +161,7 @@ def etl_migration_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     actions ride along as pinned literal columns."""
 
     def build() -> DataFrame:
-        wh = os.path.join(_scratch(spark), f"migrate-{os.path.basename(sf_dir)}")
+        wh = tempfile.mkdtemp(prefix="migrate-", dir=_scratch(spark))
         legacy = load_table(spark, sf_dir, "nation").select(
             F.col("n_nationkey").alias("code"), F.col("n_name").alias("name")
         )
@@ -186,7 +182,7 @@ def etl_migration_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(second).alias("second_action"),
         ).orderBy("nation_code")
 
-    return _memo(spark, sf_dir, "migration_rebuild", build)
+    return _memo(spark, sf_dir, "migration_rebuild", ["nation"], build)
 
 
 ETL_MIGRATION_REBUILD_SQL = """
@@ -213,11 +209,9 @@ def etl_reject_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         # fresh dir PER BUILD: the append-twice choreography is not
-        # idempotent, so a memo eviction re-running it against an
-        # existing sink would quadruple the copy counts
-        wh = tempfile.mkdtemp(
-            prefix=f"rejects-{os.path.basename(sf_dir)}-", dir=_scratch(spark)
-        )
+        # idempotent, so a rebuild against an existing sink would
+        # quadruple the copy counts
+        wh = tempfile.mkdtemp(prefix="rejects-", dir=_scratch(spark))
         res = validate_split(
             _raw_observations(spark, sf_dir), observation_rules()
         )
@@ -233,7 +227,7 @@ def etl_reject_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("observation_id")
         )
 
-    return _memo(spark, sf_dir, "reject_sink", build)
+    return _memo(spark, sf_dir, "reject_sink", ["orders"], build)
 
 
 def _reject_sink_sql() -> str:
@@ -285,7 +279,7 @@ def etl_state_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last_successful_run_at").cast("long").alias("watermark_epoch"),
         ).orderBy("process_name")
 
-    return _memo(spark, sf_dir, "state_bootstrap", build)
+    return _memo(spark, sf_dir, "state_bootstrap", [], build)
 
 
 _STATE_ROWS_SQL = " UNION ALL ".join(
@@ -371,17 +365,20 @@ FROM (
 
 
 def _json_obs_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write the (subset) API-shaped feed to JSON once per (app, sf) —
-    the reference's inter-task interchange format (EP1 file hand-offs).
-    The subset (orderkey % 7 == 0) keeps the e2e fixture fast while
-    preserving every injected edge case class."""
-    path = os.path.join(_scratch(spark), f"obs-json-{os.path.basename(sf_dir)}")
-    if not os.path.exists(path):
+    """Write the (subset) API-shaped feed to JSON once per orders
+    version — the reference's inter-task interchange format (EP1 file
+    hand-offs). The subset (orderkey % 7 == 0) keeps the e2e fixture
+    fast while preserving every injected edge case class."""
+
+    def build() -> str:
+        path = os.path.join(tempfile.mkdtemp(prefix="obs-", dir=_scratch(spark)), "json")
         raw = _raw_observations(spark, sf_dir).filter(
             F.col("Id").cast("long") % 7 == 0
         )
-        atomic_overwrite(path, lambda new: raw.write.mode("overwrite").json(new))
-    return path
+        raw.write.json(path)
+        return path
+
+    return _memo(spark, sf_dir, "json_source", ["orders"], build)
 
 
 # the oracle twin of the % 7 == 0 subset of the derived raw feed
@@ -418,7 +415,7 @@ def etl_json_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = spark.read.schema(RAW_OBSERVATION).json(src)
         return back.select(*[f.name for f in RAW_OBSERVATION.fields])
 
-    return _memo(spark, sf_dir, "json_interchange", build)
+    return _memo(spark, sf_dir, "json_interchange", ["orders"], build)
 
 
 ETL_JSON_INTERCHANGE_SQL = f"SELECT * FROM ({_RAW7_FEED_SQL})"
@@ -437,7 +434,7 @@ def etl_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         src = _json_obs_source(spark, sf_dir)
-        wh = os.path.join(_scratch(spark), f"e2e-wh-{os.path.basename(sf_dir)}")
+        wh = tempfile.mkdtemp(prefix="e2e-wh-", dir=_scratch(spark))
         cfg = PipelineConfig(
             warehouse_dir=wh,
             source_observations=src,
@@ -457,7 +454,7 @@ def etl_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "numeric_value",
         ).orderBy("observation_id")
 
-    return _memo(spark, sf_dir, "pipeline_e2e", build)
+    return _memo(spark, sf_dir, "pipeline_e2e", ["orders"], build)
 
 
 ETL_PIPELINE_E2E_SQL = f"""

@@ -24,10 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import bounded_persist_cache, register_plan_cache
+from ..caching import memo
 from ..functions import text as TX
 from ..functions import vectors as VEC
-from ..sources.catalog import load_table, spread_by_hash, spread_for_python
+from ..sources.catalog import load_table, spread_by_hash, spread_for_python, table_path
 
 # ---------------------------------------------------------------------------
 # Shared corpus: documents with deterministic near/exact duplicates injected
@@ -58,9 +58,6 @@ JACCARD_THRESHOLD = 0.6
 NGRAM_DF_CUTOFF = 1000
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_plan_cache({})
-
-
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-5-gram shingles as ROWS:
     (doc_id, shingle, n_sh, df_sh).
@@ -71,7 +68,7 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: shuffles carry (doc_id, shingle) pairs, never whole
     shingle arrays.
 
-    The result is persisted and memoized per (application, sf_dir): both
+    The result is persisted and memoized on the corpus version: both
     near-dup queries reference it several times (signature build, both
     join sides, verification); without the cache each reference re-scans
     and re-tokenizes the corpus (8 scans observed in the minhash plan).
@@ -104,11 +101,9 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
         ).withColumn(
             "df_sh", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-        )
+        ).persist()
 
-    return bounded_persist_cache(
-        _SHINGLE_CACHE, (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo(spark, "shingles", [table_path(sf_dir, "documents")], build, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -345,12 +340,9 @@ def dedup_ngram_jaccard(
     return _jaccard_filtered(pairs)
 
 
-_ARRAYS_CACHE: dict[tuple[str, str], DataFrame] = register_plan_cache({})
-
-
 def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc shingle ARRAYS (doc_id, sh_arr, n_sh), persisted per
-    (application, sf_dir) like the row table. This is the verification-
+    """Per-doc shingle ARRAYS (doc_id, sh_arr, n_sh), persisted and
+    memoized like the row table. This is the verification-
     side shape: candidate pairs are few, so joining them against per-doc
     arrays via a broadcast of the candidates touches no postings shuffle
     at all — where the previous postings-join verify re-shuffled and
@@ -362,11 +354,9 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sh.groupBy("doc_id").agg(
             F.collect_list("shingle").alias("sh_arr"),
             F.max("n_sh").alias("n_sh"),  # constant per doc: max = the value
-        )
+        ).persist()
 
-    return bounded_persist_cache(
-        _ARRAYS_CACHE, (spark.sparkContext.applicationId, sf_dir), build
-    )
+    return memo(spark, "shingle_arrays", [table_path(sf_dir, "documents")], build, sf_dir)
 
 
 # Broadcast the candidate side only when its EXACT cardinality is under
@@ -467,9 +457,6 @@ _HASH_A = [((2 * i + 1) * 2654435761 % _MERSENNE_P) or 1 for i in range(1, NUM_H
 _HASH_B = [(i * 40503 * 65537 + 11) % _MERSENNE_P for i in range(1, NUM_HASHES + 1)]
 
 
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = register_plan_cache({})
-
-
 def _minhash_signatures(sh: DataFrame) -> DataFrame:
     """MinHash signatures from the shingle ROW table: hash each shingle
     once (murmur3 folded into [0, 2^31)), then 96 partial-aggregated MINs
@@ -542,14 +529,13 @@ DEDUP_PREFIX_SQL = DEDUP_NGRAM_SQL  # exact pair set — completeness is provabl
 
 
 def _cached_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted MinHash signature table per (application, sf_dir) —
+    """Persisted, memoized MinHash signature table —
     the reusable index artifact (~800 B/doc) consumed by the LSH
     self-join AND the incremental batch-vs-historical variant."""
     sh = _shingle_table(spark, sf_dir)
-    return bounded_persist_cache(
-        _SIG_CACHE,
-        (spark.sparkContext.applicationId, sf_dir),
-        lambda: _minhash_signatures(sh),
+    return memo(
+        spark, "minhash_signatures", [table_path(sf_dir, "documents")],
+        lambda: _minhash_signatures(sh).persist(), sf_dir,
     )
 
 

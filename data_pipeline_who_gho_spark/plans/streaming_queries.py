@@ -22,7 +22,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..caching import input_version, memo
+from ..sources.catalog import load_table, table_path
 from ..streaming.incremental import (
     stream_event_counts,
     stream_hopping_counts as _hopping_counts,
@@ -50,9 +51,11 @@ atexit.register(_cleanup_temp_paths)
 
 
 def _staged_write(spark: SparkSession, variant: str, sf_dir: str, write) -> str:
-    """Run ``write(path)`` once per (app, variant, sf_dir); reuse after."""
+    """Run ``write(path)`` once per (app, variant, events version);
+    reuse after.  Every variant stages the ``events`` table."""
     app = spark.sparkContext.applicationId
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    version = input_version([table_path(sf_dir, "events")])
+    tag = hashlib.md5(repr((sf_dir, version)).encode()).hexdigest()[:8]
     path = os.path.join(tempfile.gettempdir(), f"stream-src-{app}-{variant}-{tag}")
     with _STAGE_LOCK:
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -367,9 +370,6 @@ GROUP BY 1, 2, 3
 """
 
 
-_FEB_WAREHOUSE: dict[tuple[str, str], str] = {}
-
-
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once streaming apply: the canonical production sink shape
     ``foreachBatch`` + idempotent keyed MERGE.
@@ -388,8 +388,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.load import upsert
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FEB_WAREHOUSE:
+    def build() -> str:
         base = tempfile.mkdtemp(prefix="feb-upsert-")
         atexit.register(shutil.rmtree, base, ignore_errors=True)
         wh = os.path.join(base, "wh")
@@ -435,10 +434,10 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not q.awaitTermination(300):
                 q.stop()
                 raise TimeoutError("foreachBatch upsert did not finish in 300s")
-        _FEB_WAREHOUSE[key] = wh
-    facts = spark.read.parquet(
-        os.path.join(_FEB_WAREHOUSE[key], "event_facts")
-    )
+        return wh
+
+    wh = memo(spark, "feb_upsert", [table_path(sf_dir, "events")], build, sf_dir)
+    facts = spark.read.parquet(os.path.join(wh, "event_facts"))
     return (
         facts.groupBy("event_type")
         .agg(

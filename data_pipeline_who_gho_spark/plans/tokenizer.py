@@ -36,9 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache
+from ..caching import memo
 from ..functions import text as TX
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
 
 BPE_STEPS = 6
 
@@ -118,31 +118,12 @@ def _merge_step(state: DataFrame) -> tuple[DataFrame, DataFrame]:
     return best, new_state
 
 
-# learned (merge DataFrames, final symbol state) per (application, sf):
-# both registered queries consume the same K checkpointed iterations.
-# Bounded: entries pin localCheckpoint blocks, so a long-lived session
-# sweeping many sf dirs (census, scaling runs) must not accumulate them.
-_LEARN_CACHE: dict[tuple[str, str], tuple[list[DataFrame], DataFrame]] = register_plan_cache({})
-_LEARN_CACHE_MAX = 8
-
-
 def _learn(spark: SparkSession, sf_dir: str) -> tuple[list[DataFrame], DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEARN_CACHE:
-        # true LRU: refresh recency on hit, else an early-inserted hot
-        # sf dir would be evicted before a cold later one
-        _LEARN_CACHE[key] = _LEARN_CACHE.pop(key)
-    else:
-        if len(_LEARN_CACHE) >= _LEARN_CACHE_MAX:
-            # evict the LEAST-RECENTLY-USED entry (dicts preserve
-            # insertion order; hits re-insert at the end). Dropping
-            # the Python references releases the py4j proxies via
-            # CPython refcounting, which detaches the JVM-side
-            # DataFrames and lets ContextCleaner reclaim the
-            # localCheckpoint blocks — there is no public unpersist
-            # handle for checkpoint RDDs, so reference-drop IS the
-            # release mechanism.
-            _LEARN_CACHE.pop(next(iter(_LEARN_CACHE)))
+    """Learned (merge DataFrames, final symbol state), memoized on the
+    corpus version: both registered queries consume the same K
+    checkpointed iterations."""
+
+    def build() -> tuple[list[DataFrame], DataFrame]:
         state = _word_symbols(spark, sf_dir)
         merges: list[DataFrame] = []
         for _ in range(BPE_STEPS):
@@ -159,8 +140,9 @@ def _learn(spark: SparkSession, sf_dir: str) -> tuple[list[DataFrame], DataFrame
             best = best.localCheckpoint(eager=False)
             state = state.localCheckpoint(eager=True)
             merges.append(best)
-        _LEARN_CACHE[key] = (merges, state)
-    return _LEARN_CACHE[key]
+        return merges, state
+
+    return memo(spark, "bpe_learn", [table_path(sf_dir, "documents")], build, sf_dir)
 
 
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -94,6 +94,11 @@ _TABLE_MEMO: dict[tuple[str, str, int], DataFrame] = {}
 _TABLE_MEMO_MAX = 512
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where fixture table ``name`` lives under ``sf_dir``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan → pushdown/pruning come free.
 
@@ -103,7 +108,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     conditions — attribute-style conditions (``a['c'] == b['c']``) on
     the shared handle would hit AMBIGUOUS_SELF_JOIN or compare a column
     with itself."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     try:
         mtime = os.stat(path).st_mtime_ns
     except OSError:

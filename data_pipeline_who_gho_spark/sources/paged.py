@@ -30,16 +30,42 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .state import EtlStateRepository
+# pandas and the state table stay out of the DSv2 readers' Python
+# workers, which import this module for fetch_page_with_retry
+if TYPE_CHECKING:
+    import pandas as pd
+
+    from .state import EtlStateRepository
 
 # fetch_page(key: str, page_index: int, page_size: int) -> list[dict]
 # Empty list ⇒ no more pages (reference: page < $top stops, 404 ⇒ empty).
 PageFetcher = Callable[[str, int, int], list[dict]]
+
+
+def fetch_page_with_retry(
+    fetcher: PageFetcher,
+    key: str,
+    page: int,
+    page_size: int,
+    max_retries: int = 3,
+    backoff_s: float = 0.1,
+) -> list[dict]:
+    """S2 for one page: call the fetcher, retrying with exponential
+    backoff (tenacity parity, etl/extract.py:30). Every page loop — this
+    module's and the DSv2 readers' — fetches through it."""
+    attempt = 0
+    while True:
+        try:
+            return fetcher(key, page, page_size)
+        except Exception:
+            attempt += 1
+            if attempt >= max_retries:
+                raise
+            time.sleep(backoff_s * (2 ** (attempt - 1)))
 
 
 def fetch_all_pages(
@@ -49,21 +75,13 @@ def fetch_all_pages(
     max_retries: int = 3,
     backoff_s: float = 0.1,
 ) -> Iterator[dict]:
-    """S1+S2+S3 for one key: paginate until a short/empty page, retrying
-    each page with exponential backoff (tenacity parity,
-    etl/extract.py:30)."""
+    """S1+S2+S3 for one key: paginate until a short/empty page, each
+    page fetched with retry."""
     page = 0
     while True:
-        attempt = 0
-        while True:
-            try:
-                records = fetcher(key, page, page_size)
-                break
-            except Exception:
-                attempt += 1
-                if attempt >= max_retries:
-                    raise
-                time.sleep(backoff_s * (2 ** (attempt - 1)))
+        records = fetch_page_with_retry(
+            fetcher, key, page, page_size, max_retries, backoff_s
+        )
         yield from records
         if len(records) < page_size:
             return
@@ -101,6 +119,8 @@ def fetch_paged(
         plan = plan.repartition(target)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for batch in batches:
             for key in batch[key_col]:
                 rows = []

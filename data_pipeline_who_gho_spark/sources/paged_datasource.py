@@ -24,8 +24,9 @@ Semantics carried over from the reference:
 The fetcher is named by a ``module:function`` option and imported on the
 executor (plain strings are the only values a DataSource option can
 carry); the default is the deterministic fixture fetcher. At scale the
-page loop is I/O-bound per key — parallelism comes from key count, and
-retry sits inside the fetcher exactly as in sources/paged.py.
+page loop is I/O-bound per key — parallelism comes from key count. Every
+page, batch or stream, is fetched through ``paged.fetch_page_with_retry``:
+the same per-page retry/backoff as the fetch-plan path.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
+
+from .paged import fetch_page_with_retry
 
 DEFAULT_FETCHER = "data_pipeline_who_gho_spark.sources.testing:pages_fetcher"
 DEFAULT_SCHEMA = "key string, idx int"
@@ -88,7 +91,7 @@ class PagedReader(DataSourceReader):
         fetch = _resolve_fetcher(self.fetcher_spec)
         names = [f.name for f in self.schema.fields]
         for page in range(self.max_pages):
-            records = fetch(partition.key, page, self.page_size)
+            records = fetch_page_with_retry(fetch, partition.key, page, self.page_size)
             for rec in records:
                 yield tuple(rec.get(n) for n in names)
             if len(records) < self.page_size:
@@ -141,7 +144,7 @@ class PagedStreamReader(SimpleDataSourceStreamReader):
     def _fetch_page(self, key: str, page: int) -> tuple[list[tuple], bool]:
         fetch = _resolve_fetcher(self.fetcher_spec)
         names = [f.name for f in self.schema.fields]
-        records = fetch(key, page, self.page_size)
+        records = fetch_page_with_retry(fetch, key, page, self.page_size)
         rows = [tuple(rec.get(n) for n in names) for rec in records]
         return rows, len(records) < self.page_size
 

@@ -101,6 +101,7 @@ def test_blocked_pairs_survive_cross_chunk_split(spark, monkeypatch):
     a.chunk <= b.chunk tiling plus a naive id_a < id_b filter silently
     dropped such pairs). One-hot synthetic vectors: only ids 3 (chunk 3)
     and 10 (chunk 2) are identical."""
+    from data_pipeline_who_gho_spark import caching
     from data_pipeline_who_gho_spark.plans import curation, extras
 
     rows = [
@@ -109,14 +110,14 @@ def test_blocked_pairs_survive_cross_chunk_split(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     monkeypatch.setattr(extras, "_t", lambda s, d, n: df)
-    curation._BLOCKED_PAIRS_CACHE.clear()
+    caching.clear_plan_caches()
     try:
         out = curation.embed_neardup_blocked(spark, "synthetic://cross-chunk")
         pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in out.collect()}
         # (0, 1000000) and (11, 1000011) are _vec_corpus's injected dups
         assert pairs == {(3, 10): 1.0, (0, 1000000): 1.0, (11, 1000011): 1.0}
     finally:
-        curation._BLOCKED_PAIRS_CACHE.clear()
+        caching.clear_plan_caches()
 
 
 def test_blocked_equals_expression_baseline(spark):
@@ -173,6 +174,7 @@ def test_bucketed_tile_count_is_linear(spark, monkeypatch):
     64-dim (the plane dimensionality — shorter inputs now raise), codes
     are diverse, and a constant-size hot pattern plus a tiny forced tile
     width exercises the hot-bucket sub-split."""
+    from data_pipeline_who_gho_spark import caching
     from data_pipeline_who_gho_spark.plans import curation, extras
 
     def run(n: int) -> int:

@@ -101,9 +101,9 @@ def test_pipeline_e2e_fact_table(spark):
 def test_reject_sink_survives_memo_eviction(spark):
     # the append-twice choreography must land in a FRESH sink per
     # build, or a memo eviction re-run would quadruple copy counts
-    import data_pipeline_who_gho_spark.plans.etl_seams as es
+    from data_pipeline_who_gho_spark import caching
 
     r1 = sorted(map(tuple, etl_reject_sink(spark, SF).collect()))
-    es._MEMO.clear()
+    caching.clear_plan_caches()
     r2 = sorted(map(tuple, etl_reject_sink(spark, SF).collect()))
     assert r1 == r2

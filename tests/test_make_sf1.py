@@ -8,7 +8,8 @@ import os
 
 import pytest
 
-SF1 = "/root/repo/.scratch/sf1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF1 = os.path.join(REPO, ".scratch", "sf1")
 SRC = "/root/testdata/sf0.1"
 
 pytestmark = pytest.mark.skipif(

@@ -129,3 +129,47 @@ def test_stream_reader_offsets_advance_and_retire():
     # deterministic replay of the full range
     replay = list(reader.readBetweenOffsets(reader.initialOffset(), off))
     assert sorted(i for _, i in replay) == [0, 1, 2, 3, 4]
+
+
+def _stream_rows(spark, keys: str, fetcher: str) -> list:
+    import os
+    import tempfile
+    import uuid
+
+    name = "paged_stream_" + uuid.uuid4().hex[:8]
+    q = (
+        spark.readStream.format("paged")
+        .option("keys", keys)
+        .option("page_size", "2")
+        .option("fetcher", fetcher)
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt-{name}"))
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def _batch_rows(spark, keys: str, fetcher: str) -> list:
+    return (
+        spark.read.format("paged").option("keys", keys).option("page_size", "2")
+        .option("fetcher", fetcher).load().collect()
+    )
+
+
+@pytest.mark.parametrize("read", [_batch_rows, _stream_rows], ids=["batch", "stream"])
+def test_transient_fetch_failures_are_retried(spark, read):
+    """flaky_fetcher fails the first attempt at every (key, page); every
+    page loop retries it, so the rows equal the never-failing fetcher's.
+    Fresh keys per run: the fail-once ledger lives in the worker."""
+    import uuid
+
+    keys = ",".join(f"r{uuid.uuid4().hex[:6]}{i}" for i in range(3))
+    testing = "data_pipeline_who_gho_spark.sources.testing"
+    flaky = read(spark, keys, f"{testing}:flaky_fetcher")
+    steady = read(spark, keys, f"{testing}:pages_fetcher")
+    assert len(flaky) == 15
+    assert sorted(map(tuple, flaky)) == sorted(map(tuple, steady))

@@ -39,10 +39,11 @@ def test_rotation_puts_never_green_first():
 
 
 def test_all_plan_caches_registered():
-    """Every module-level *_CACHE dict must be in caching.PLAN_CACHES
-    (ADVICE r06): stale_check's hermetic hashing and the gate-boundary
-    cleanup iterate the registry, so an unregistered cache would
-    silently reintroduce order-dependent plan-hash drift."""
+    """No module-level *_CACHE / *_MEMO dict beside caching.memo's own
+    (and the catalog's mtime-keyed handle memo): stale_check's hermetic
+    hashing and the gate-boundary cleanup clear that memo only, so a
+    private memo would silently reintroduce order-dependent plan-hash
+    drift and escape the input versioning."""
     from data_pipeline_who_gho_spark import caching
 
     entrymod.queries()  # force-import every plans module

@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -116,7 +117,7 @@ def run(sf_dir: str, bloom_on: bool) -> dict:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch", "sf1")
     off = run(sf_dir, False)
     on = run(sf_dir, True)
     assert off["result"] == on["result"], "bloom filter changed RESULTS — bug"

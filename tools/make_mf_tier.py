@@ -16,11 +16,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf10text"
+    src = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch", "sf10text")
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     dst = src.rstrip("/") + "_mf"
 

@@ -2,7 +2,7 @@
 
 The driver ships sf0.001/0.01/0.1 only; one more decade is needed to
 see past fixed overhead (SCALING.md). sf1 is derived from sf0.1 by 10
-key-shifted copies, built with DuckDB into ``/root/repo/.scratch/sf1``
+key-shifted copies, built with DuckDB into ``.scratch/sf1`` of this checkout
 (gitignored — derived data, ~150 MB).
 
 Copy semantics preserve each operator's workload *character* instead of
@@ -31,6 +31,8 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SRC = "/root/testdata/sf0.1"
 SHIFT = 10_000_000
 TARGET_ROW_GROUPS = 64
@@ -38,7 +40,7 @@ TARGET_ROW_GROUPS = 64
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf1")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     con.sql("SET threads TO 16")

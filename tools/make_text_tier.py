@@ -14,7 +14,7 @@ copy semantics: shifted keys, tag-injected text so the intra-corpus
 dup RATE stays constant instead of every doc gaining 99 exact twins).
 
 Usage: python tools/make_text_tier.py [copies] [out_dir]
-Defaults: 100 copies -> /root/repo/.scratch/sf10text (gitignored).
+Defaults: 100 copies -> .scratch/sf10text of this checkout (gitignored).
 """
 
 from __future__ import annotations
@@ -24,13 +24,15 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SRC = "/root/testdata/sf0.1"
 SHIFT = 10_000_000
 
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf10text"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch", "sf10text")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     con.sql("SET threads TO 16")

@@ -18,7 +18,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from data_pipeline_who_gho_spark.session import get_spark
@@ -54,7 +55,7 @@ def census(plan: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLAN_CENSUS.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PLAN_CENSUS.json")
     spark = get_spark(app_name="plan-census")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_pipeline_who_gho_spark.plans import curation12, curation13
 from data_pipeline_who_gho_spark.session import get_spark
@@ -28,7 +29,7 @@ SF_DIRS = {
     "0.001": "/root/testdata/sf0.001",
     "0.01": "/root/testdata/sf0.01",
     "0.1": "/root/testdata/sf0.1",
-    "1": "/root/repo/.scratch/sf1",
+    "1": os.path.join(REPO, ".scratch", "sf1"),
 }
 
 QUEUE = [

@@ -11,25 +11,25 @@ Usage: python tools/scaling_probe.py [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from data_pipeline_who_gho_spark.session import get_spark
-
-import os
 
 # sf1 is derived data (tools/make_sf1.py) — probed only when materialized
 SF_DIRS = {
     "0.001": "/root/testdata/sf0.001",
     "0.01": "/root/testdata/sf0.01",
     "0.1": "/root/testdata/sf0.1",
-    "1": "/root/repo/.scratch/sf1",
+    "1": os.path.join(REPO, ".scratch", "sf1"),
 }
 SFS = [sf for sf, d in SF_DIRS.items() if os.path.exists(d)]
-OUT = "/root/repo/SCALING.json"
+OUT = os.path.join(REPO, "SCALING.json")
 
 
 def main() -> None:

@@ -33,14 +33,15 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from data_pipeline_who_gho_spark import caching
 from data_pipeline_who_gho_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-OUT = "/root/repo/PLAN_HASHES.json"
+OUT = os.path.join(REPO, "PLAN_HASHES.json")
 
 _NORMALIZERS = [
     # lambda-variable name suffixes (x_12) draw from a SESSION-GLOBAL
@@ -87,9 +88,9 @@ def plan_hash(df) -> str:
 
 
 def _reset_plan_caches(spark) -> None:
-    """Hermetic hashing: drop every registered persisted-frame cache
-    (``caching.PLAN_CACHES``) and Spark's CacheManager entries before
-    building a query's plan.
+    """Hermetic hashing: drop every plan-memo entry
+    (``caching.clear_plan_caches``) and Spark's CacheManager entries
+    before building a query's plan.
 
     Without this the hash is ORDER-dependent: a query that runs earlier
     in the rotation (e.g. round 6's corpus_build_e2e, which executes
@@ -99,9 +100,8 @@ def _reset_plan_caches(spark) -> None:
     because the registry order changed — verified by hashing them first
     (baseline match) vs after e2e (mismatch) in one session.
 
-    Caches are found via the EXPLICIT registry, not a name-suffix scan
-    (ADVICE r06): ``main`` refuses to run if the audit finds a
-    ``*_CACHE`` module dict that forgot to register."""
+    ``main`` refuses to run if the audit finds a ``*_CACHE`` /
+    ``*_MEMO`` module dict beside the package memo."""
     caching.clear_plan_caches()
     spark.catalog.clearCache()
 
@@ -111,9 +111,8 @@ def main() -> None:
     rogue = caching.unregistered_caches()
     if rogue:
         raise SystemExit(
-            f"unregistered plan caches {rogue}: wrap the definition in "
-            "caching.register_plan_cache({}) or the hashes below would "
-            "be order-dependent"
+            f"module-level memos {rogue} bypass caching.memo: build "
+            "through it or the hashes below would be order-dependent"
         )
     spark = get_spark(app_name="stale-check")
     spark.sparkContext.setLogLevel("ERROR")

@@ -32,9 +32,10 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SF_DIR = "/root/repo/.scratch/sf1"
+SF_DIR = os.path.join(REPO, ".scratch", "sf1")
 CORES = [4, 8, 16, 32]
 QUERIES = ["dedup_simhash", "semantic_dedup_reps", "corpus_build_e2e"]
 
